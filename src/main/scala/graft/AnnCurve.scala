@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
-import graft.operators.Similarity
+import graft.operators.{IndexGen, Similarity}
 import graft.pipeline.Pins
 import graft.queries.Tables
 
@@ -66,7 +66,7 @@ object AnnCurve {
     hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
     Similarity.writeAnnIndex(e, "vec_id", "vec", s"$base/idx", "anncurve",
       m = pqM, k = pqK, nlist = nlist, numBuckets = 16)
-    val idx = Similarity.readAnnIndex(spark, s"$base/idx", "anncurve")
+    val idx = IndexGen.open(spark, Similarity.Ann, s"$base/idx", "anncurve")
 
     // brute-force truth (q200's contract: round-6 cosine, id tiebreak)
     val c = e.select(col("vec_id").as("neighbor_id"), col("vec").as("cvec"),

@@ -88,21 +88,21 @@ object OptProbe {
       System.err.println("run `OptProbe q202` first (needs its index)")
       return
     }
-    val idx = Dedup.readLshIndex(spark, idxPath, "probe_q202_idx")
+    val idx = IndexGen.open(spark, Dedup.Lsh, idxPath, "probe_q202_idx")
     timed("100x withWriterLock(noop body)") {
       (1 to 100).foreach(_ =>
         IndexGen.withWriterLock(spark, idxPath) { () })
     }
     timed("100x manifestTag(bands+posts)") {
       (1 to 100).foreach { _ =>
-        IndexGen.manifestTag(spark, idx.bandsDir)
-        IndexGen.manifestTag(spark, idx.postsDir)
+        IndexGen.manifestTag(spark, idx.dir("bands"))
+        IndexGen.manifestTag(spark, idx.dir("posts"))
       }
     }
     timed("100x repairToManifest(b+p)") {
       (1 to 100).foreach { _ =>
-        IndexGen.repairToManifest(spark, idx.bandsDir)
-        IndexGen.repairToManifest(spark, idx.postsDir)
+        IndexGen.repairToManifest(spark, idx.dir("bands"))
+        IndexGen.repairToManifest(spark, idx.dir("posts"))
       }
     }
   }
@@ -157,7 +157,7 @@ object OptProbe {
   /** q202_ingest_stream decomposed: index build, each streaming drain,
     * the final sink read. Phases mirror QueriesDedup's q202 exactly. */
   private def q202(spark: SparkSession, dir: String): Unit = {
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, IndexGen}
     import graft.streaming.DocStream
     val d = graft.queries.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
@@ -181,8 +181,8 @@ object OptProbe {
       Dedup.writeLshIndex(d, "doc_id", "text", idxPath, name,
         shingleSize = 3, numHashes = 64, bands = 16)
     }
-    val idx = timed("readLshIndex") {
-      Dedup.readLshIndex(spark, idxPath, name)
+    val idx = timed("open LSH index") {
+      IndexGen.open(spark, Dedup.Lsh, idxPath, name)
     }
     require(idx0.path == idx.path)
     timed("write batch1 parquet") {
@@ -224,8 +224,8 @@ object OptProbe {
       Dedup.probeLshIndex(idx2w, b1, "doc_id", "text", threshold = 0.7)
         .write.mode("append").parquet(s"$base/pairs2")
     }
-    timed("batch appendToLshIndex") {
-      Dedup.appendToLshIndex(idx2w, b1, "doc_id", "text",
+    timed("batch LSH append") {
+      IndexGen.append(idx2w, b1, "doc_id", "text",
         batchTag = Some("probe_batch"))
     }
   }
@@ -315,7 +315,7 @@ object OptProbe {
     * the recall `require` action, final sink. */
   private def q220(spark: SparkSession, dir: String): Unit = {
     import graft.functions.Vec
-    import graft.operators.Similarity
+    import graft.operators.{IndexGen, Similarity}
     import org.apache.spark.sql.expressions.Window
     val e = graft.queries.Tables(spark, dir, "embeddings")
       .select(col("vec_id"), Vec.asDouble(col("embedding")).as("vec"))
@@ -338,8 +338,8 @@ object OptProbe {
       Similarity.writeAnnIndex(e, "vec_id", "vec", path, name,
         m = 8, k = 256, nlist = nlist, numBuckets = 16)
     }
-    val idx = timed("readAnnIndex") {
-      Similarity.readAnnIndex(spark, path, name)
+    val idx = timed("open ANN index") {
+      IndexGen.open(spark, Similarity.Ann, path, name)
     }
     val approx = timed("rerank probe (noop)") {
       val a = Similarity.probeAnnIndexRerank(idx, q, "qid", "qvec",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -14,9 +14,10 @@ import graft.pipeline.Pins
   * set for every ingest batch, so the benchmark's grams must persist
   * pre-bucketed on the join key and never re-shuffle.
   *
-  * Layout under `path` ([[IndexGen]] discipline — generations, commit
-  * markers, tombstones, shared with the LSH and ANN indexes):
-  *   - `{name}_grams` (gram BIGINT, id BIGINT): the benchmark's DISTINCT
+  * Layout under `path` (the [[Ngram]] family of the [[IndexGen]]
+  * lifecycle — generations, commit markers, tombstones, shared with the
+  * LSH and ANN indexes):
+  *   - `{name}_grams` (id BIGINT, gram BIGINT): the benchmark's DISTINCT
   *     per-document N-gram digests, bucketed by gram into `numBuckets`
   *     files — the probe join's index side scans pre-partitioned on
   *     exactly its join key;
@@ -32,10 +33,24 @@ object Contam {
 
   case class NgramIndexMeta(n: Int, numBuckets: Int)
 
-  case class NgramIndex(name: String, path: String, meta: NgramIndexMeta,
-      gen: Int = 0) {
-    def gramsTable: String = s"${name}_grams"
-    def gramsDir: String = IndexGen.dirFor(path, "grams", gen)
+  type NgramIndex = IndexGen.Index[NgramIndexMeta]
+
+  /** The n-gram index family: one table `grams` (id, gram), bucketed by
+    * gram. Probes aggregate with countDistinct on both the gram and the
+    * source id, so duplicated gram rows (an untagged retried append)
+    * cannot change any probe answer — a batch tag only keeps a replay
+    * from doubling the benchmark's physical footprint. */
+  object Ngram extends IndexGen.Family[NgramIndexMeta] {
+    val tables = Seq(
+      IndexGen.TableSpec("grams", "id BIGINT, gram BIGINT", Seq("gram")))
+    def numBuckets(m: NgramIndexMeta): Int = m.numBuckets
+    def metaFields(m: NgramIndexMeta): Seq[(String, Any)] =
+      Seq("n" -> m.n, "numBuckets" -> m.numBuckets)
+    def metaOf(f: String => String): NgramIndexMeta =
+      NgramIndexMeta(f("n").toInt, f("numBuckets").toInt)
+    def rows(m: NgramIndexMeta, batch: DataFrame, idCol: String,
+        textCol: String): IndexGen.Rows =
+      IndexGen.Rows(Seq(gramDigests(batch, idCol, textCol, m.n)))
   }
 
   /** DISTINCT (id, gram-digest) rows for a document frame. */
@@ -46,46 +61,13 @@ object Contam {
       .select(col("id"), Text.md5Long(col("__g")).as("gram"))
       .distinct()
 
-  /** Build (or overwrite) the index from the benchmark frame. */
+  /** Build (or overwrite) the index from the benchmark frame with
+    * [[IndexGen.write]]. */
   def writeNgramIndex(benchmark: DataFrame, idCol: String, textCol: String,
       path: String, name: String, n: Int = 13,
-      numBuckets: Int = 32): NgramIndex = {
-    require(benchmark.schema(benchmark.schema.fieldIndex(idCol)).dataType ==
-      org.apache.spark.sql.types.LongType,
-      "persisted index ids must be BIGINT (cross-session DDL)")
-    val spark = benchmark.sparkSession
-    val meta = NgramIndexMeta(n, numBuckets)
-    val idx = NgramIndex(name, path, meta)
-    spark.sql(s"DROP TABLE IF EXISTS ${idx.gramsTable}")
-    IndexGen.cleanAll(spark, path, Seq("grams"))
-    gramDigests(benchmark, idCol, textCol, n)
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "gram")
-      .option("path", idx.gramsDir)
-      .saveAsTable(idx.gramsTable)
-    IndexGen.commitManifest(spark, idx.gramsDir)
-    writeMeta(spark, s"$path/meta.json", meta)
-    idx
-  }
-
-  /** Open a persisted index at its newest COMMITTED generation and
-    * register the bucketed external table in THIS session's catalog. */
-  def readNgramIndex(spark: SparkSession, path: String,
-      name: String): NgramIndex = {
-    val idx = NgramIndex(name, path, readMeta(spark, s"$path/meta.json"),
-      gen = IndexGen.resolveGen(spark, path))
-    // open-time recovery: drop a torn batch append's leftover files
-    IndexGen.repairToManifest(spark, idx.gramsDir)
-    registerTable(spark, idx)
-    idx
-  }
-
-  private def registerTable(spark: SparkSession, idx: NgramIndex): Unit =
-    IndexGen.ensureTable(spark, idx.gramsTable, idx.gramsDir,
-      s"""CREATE TABLE ${idx.gramsTable} (id BIGINT, gram BIGINT)
-         |USING parquet
-         |CLUSTERED BY (gram) INTO ${idx.meta.numBuckets} BUCKETS
-         |LOCATION '${idx.gramsDir}'""".stripMargin)
+      numBuckets: Int = 32): NgramIndex =
+    IndexGen.write(Ngram, benchmark, idCol, textCol, path, name)(
+      NgramIndexMeta(n, numBuckets))
 
   /** Per-document contamination of `batch` against the indexed benchmark:
     * (idCol, n_grams, n_hits, n_sources) — distinct grams, distinct grams
@@ -101,7 +83,7 @@ object Contam {
       textCol: String): DataFrame = {
     val spark = batch.sparkSession
     val tombs = IndexGen.tombstones(spark, index.path)
-    val idxGrams = IndexGen.live(spark.table(index.gramsTable), tombs)
+    val idxGrams = IndexGen.live(spark.table(index.table("grams")), tombs)
       .select(col("gram"), col("id").as("__src"))
     val bGrams = Pins.pin(
       gramDigests(batch, idCol, textCol, index.meta.n))
@@ -145,107 +127,5 @@ object Contam {
     val kept = corpus.join(dropped.select(col(idCol)), Seq(idCol),
       "left_anti")
     (kept, dropped)
-  }
-
-  /** Absorb NEW benchmark documents (e.g. a fresh eval suite) into the
-    * index. Bucketed append: one file per bucket per append — the probe
-    * keeps its exchange-free shape; [[maybeCompactNgramIndex]] bounds the
-    * file growth. Caller contract: appended ids disjoint from indexed.
-    * Holds the [[IndexGen.withWriterLock]] lease — a concurrent append's
-    * half-written files would otherwise be legitimized by this one's
-    * manifest commit.
-    *
-    * `batchTag` makes a RETRIED append exactly-once (tag committed
-    * atomically with the manifest; a retry whose tag already heads the
-    * newest manifest appends nothing). Unlike the LSH/ANN families this
-    * is a size/scan concern only: [[probeNgramIndex]] aggregates with
-    * countDistinct on both the gram and the source id, so duplicated
-    * gram rows cannot change any probe answer — the tag just keeps a
-    * replay from doubling the benchmark's physical footprint. */
-  def appendToNgramIndex(index: NgramIndex, benchmark: DataFrame,
-      idCol: String, textCol: String,
-      batchTag: Option[String] = None): Unit = {
-    val spark = benchmark.sparkSession
-    IndexGen.withWriterLock(spark, index.path) {
-      // manifest protocol (IndexGen): a torn append's files are repaired
-      // at the next open/append; commit only after the data write
-      // completes
-      IndexGen.repairToManifest(spark, index.gramsDir)
-      val done = batchTag.isDefined &&
-        IndexGen.manifestTag(spark, index.gramsDir) == batchTag
-      if (!done) {
-        gramDigests(benchmark, idCol, textCol, index.meta.n)
-          .write.mode("append")
-          .bucketBy(index.meta.numBuckets, "gram")
-          .option("path", index.gramsDir)
-          .saveAsTable(index.gramsTable)
-        IndexGen.commitManifest(spark, index.gramsDir, batchTag)
-      }
-    }
-  }
-
-  /** Retract benchmark documents (id tombstones; probes hide them
-    * immediately, the next compaction folds them into the files).
-    * Leased: a tombstone landing between a compaction's tombstones read
-    * and its clearTombstones would be silently dropped. */
-  def retractFromNgramIndex(index: NgramIndex, ids: DataFrame,
-      idCol: String): Unit =
-    IndexGen.withWriterLock(ids.sparkSession, index.path) {
-      IndexGen.appendTombstones(index.path, ids, idCol)
-    }
-
-  /** Rewrite the grams table into the next generation — one file per
-    * bucket, tombstones applied and cleared. Same crash-safety contract
-    * as [[Dedup.compactLshIndex]] (commit marker, then idempotent
-    * housekeeping). */
-  def compactNgramIndex(spark: SparkSession, index: NgramIndex)
-      : NgramIndex =
-    IndexGen.withWriterLock(spark, index.path) {
-      val bases = Seq("grams")
-      val next = index.copy(
-        gen = IndexGen.nextGen(spark, index.path, bases, index.gen))
-      IndexGen.fs(spark, index.path)
-        .delete(new org.apache.hadoop.fs.Path(next.gramsDir), true)
-      val tombs = IndexGen.tombstones(spark, index.path)
-      IndexGen.rewriteBucketed(spark, index.gramsDir, next.gramsDir,
-        s"${index.name}_grams_compacting", index.meta.numBuckets,
-        Seq("gram"), tombs)
-      IndexGen.writeMarker(spark, index.path, next.gen)
-      spark.sql(s"DROP TABLE IF EXISTS ${index.gramsTable}")
-      registerTable(spark, next)
-      IndexGen.clearTombstones(spark, index.path)
-      IndexGen.sweepOld(spark, index.path, bases, next.gen)
-      next
-    }
-
-  /** Compact when append cadence has fragmented any bucket past the bar. */
-  def maybeCompactNgramIndex(spark: SparkSession, index: NgramIndex,
-      maxFilesPerBucket: Int): NgramIndex =
-    if (IndexGen.maxFilesPerBucket(spark, index.gramsDir) > maxFilesPerBucket)
-      compactNgramIndex(spark, index)
-    else index
-
-  /** Filesystem resolution through the session conf ([[IndexGen.fs]]) —
-    * the [[readMeta]]/writeAnnMeta contract; a default Configuration()
-    * could write meta.json to a different filesystem than probes read. */
-  private def writeMeta(spark: SparkSession, file: String,
-      m: NgramIndexMeta): Unit = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    val out = IndexGen.fs(spark, file).create(p, true)
-    try out.write(
-      s"""{"n":${m.n},"numBuckets":${m.numBuckets}}""".getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readMeta(spark: SparkSession, file: String): NgramIndexMeta = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def f(k: String): String =
-      raw.split(s""""$k":""")(1).takeWhile(c => c.isDigit || c == '-')
-    NgramIndexMeta(f("n").toInt, f("numBuckets").toInt)
   }
 }

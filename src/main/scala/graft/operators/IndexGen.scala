@@ -3,14 +3,27 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared machinery for PERSISTED bucketed indexes with compaction
-  * generations and id tombstones — used by the LSH dedup index
-  * ([[Dedup.writeLshIndex]] family) and the IVF-PQ ANN index
-  * ([[Similarity.writeAnnIndex]] family).
+/** The ONE lifecycle of the persisted bucketed indexes: the LSH dedup
+  * index ([[Dedup.Lsh]]), the IVF-PQ ANN index ([[Similarity.Ann]]) and
+  * the n-gram contamination index ([[Contam.Ngram]]).
+  *
+  * A [[Family]] supplies only what differs between them: its table specs
+  * (base dir name, column DDL, bucket columns, whether compaction dedups
+  * rows), its meta.json fields, and a rows function that turns an input
+  * batch into its table rows; its training step (ANN) and its probes stay
+  * in the family's own object. This object owns everything else — write,
+  * [[open]], [[append]], [[retract]], [[compact]], [[maybeCompact]],
+  * overwrite-clean, the meta.json codec, the BIGINT id check and the
+  * streaming [[absorbOnce]] — so the lease, manifest-tag and tombstone
+  * protocol below lives in exactly one place.
   *
   * Layout contract at an index `path`:
+  *   - `meta.json`: the family's meta fields, written last by [[write]]
+  *     (the index becomes visible when it lands);
   *   - generation 0 table directories live at `$path/<base>` (the
-  *     writer's layout), generation N > 0 at `$path/<base>.cN`;
+  *     writer's layout), generation N > 0 at `$path/<base>.cN`; each is
+  *     registered as the EXTERNAL catalog table `<name>_<base>`,
+  *     bucketed so probes join it with no index-side exchange;
   *   - generation N > 0 is COMMITTED by the `$path/_compact_cN` marker,
   *     written only after every table directory of that generation is
   *     complete (the ContactsStream snapshot discipline: a generation
@@ -20,23 +33,360 @@ import org.apache.spark.sql.functions._
   *   - each table directory carries a `_manifest` naming its COMMITTED
   *     data files, so a torn batch append is detected and repaired
   *     (see the append-manifest section below);
-  *   - compactions hold the `$path/_writer_lock` lease
+  *   - every mutation holds the `$path/_writer_lock` lease
   *     ([[withWriterLock]]) so a violated single-writer contract fails
-  *     loudly instead of corrupting files.
+  *     loudly instead of corrupting files;
+  *   - `_absorbed_<batchId>` markers record the streaming micro-batches
+  *     [[absorbOnce]] has appended.
   */
-private[graft] object IndexGen {
+object IndexGen {
 
-  def fs(spark: SparkSession,
+  /** One bucketed table of a family. `base` names its directory
+    * (`$path/<base>`) and its catalog table (`<name>_<base>`); `columns`
+    * is the DDL column list; `dedup` drops exact duplicate rows at
+    * compaction (see [[rewriteBucketed]]). */
+  case class TableSpec(base: String, columns: String,
+      bucketCols: Seq[String], dedup: Boolean = false)
+
+  /** A batch's rows for each of a family's tables, in declared order.
+    * `shared` is an intermediate several of them derive from: the core
+    * persists it for the duration of the table writes. */
+  case class Rows(tables: Seq[DataFrame], shared: Option[DataFrame] = None)
+
+  /** What one index family supplies; the lifecycle is this object's. */
+  trait Family[M] {
+    /** Declared order is the append COMMIT order: the last table's
+      * manifest tag proves the whole append (see [[append]]). */
+    def tables: Seq[TableSpec]
+    def numBuckets(meta: M): Int
+    /** meta.json fields in file order: String values are written
+      * quoted, numbers bare. */
+    def metaFields(meta: M): Seq[(String, Any)]
+    /** Rebuild the meta from its fields' raw (unquoted) values. */
+    def metaOf(field: String => String): M
+    def rows(meta: M, batch: DataFrame, idCol: String,
+        srcCol: String): Rows
+  }
+
+  /** Handle to a persisted index at compaction generation `gen`. Probes
+    * MUST use `meta` (replayed from the index's own meta.json by
+    * [[open]]): a different signature family, gram width or PQ model
+    * silently matches nothing. */
+  case class Index[M](family: Family[M], name: String, path: String,
+      meta: M, gen: Int = 0) {
+    def table(base: String): String = s"${name}_$base"
+    def dir(base: String): String =
+      if (gen == 0) s"$path/$base" else s"$path/$base.c$gen"
+  }
+
+  // ------------------------------------------------------------ lifecycle
+
+  /** Build and PERSIST an index, overwriting any prior index at `path`
+    * (its catalog tables, compaction generations, markers, tombstones
+    * and streaming absorb markers must not shadow, filter or skip-absorb
+    * against the fresh generation-0 write). Each table is written one
+    * file per bucket and its manifest committed; meta.json lands last.
+    * `meta` is evaluated after the id check, so a family's training step
+    * never runs on a refused batch. */
+  def write[M](family: Family[M], batch: DataFrame, idCol: String,
+      srcCol: String, path: String, name: String)(meta: => M): Index[M] = {
+    requireBigint(batch, idCol)
+    val spark = batch.sparkSession
+    val idx = Index(family, name, path, meta)
+    family.tables.foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS ${idx.table(t.base)}"))
+    cleanAll(spark, path, family.tables.map(_.base))
+    val rows = family.rows(idx.meta, batch, idCol, srcCol)
+    withShared(rows) {
+      // a FRESH build has no ordering contract (the index becomes
+      // visible only when meta.json lands — contrast append, whose
+      // declared order IS the crash protocol), so independent table
+      // writes overlap: each job's straggler tail backfills with the
+      // other's tasks. Materialize the shared intermediate
+      // first so the concurrent jobs don't both compute it.
+      rows.shared.foreach(_.count())
+      concurrently(family.tables.zip(rows.tables).map { case (t, df) =>
+        () => saveBucketed(idx, t, df, "overwrite") })
+    }
+    family.tables.foreach(t => commitManifest(spark, idx.dir(t.base)))
+    writeMeta(spark, idx)
+    idx
+  }
+
+  /** Open a persisted index from `path`: replay its meta.json, resolve
+    * the newest COMMITTED compaction generation, repair any torn batch
+    * append (files the generation's manifests do not name), and register
+    * the bucketed external tables in THIS session's catalog — creating
+    * them when absent, RE-POINTING them when a stale entry targets a
+    * superseded generation (the cross-session path: build once, compact
+    * anywhere, probe from any later job). The DDL's bucket spec comes
+    * from the same meta as the writer's, so probes stay exchange-free. */
+  def open[M](spark: SparkSession, family: Family[M], path: String,
+      name: String): Index[M] = {
+    val idx = Index(family, name, path, readMeta(spark, family, path),
+      gen = resolveGen(spark, path))
+    family.tables.foreach(t => repairToManifest(spark, idx.dir(t.base)))
+    register(spark, idx)
+    idx
+  }
+
+  /** Absorb `batch` INTO the index: build the family's rows with the
+    * PERSISTED meta (an ANN batch is encoded with the frozen model, never
+    * retrained) and append bucketed files, one per bucket, which the
+    * bucketed scan groups back into the same partitions — probe plans
+    * keep their exchange-free shape, and [[compact]] is the small-files
+    * counter-move. Caller contract: appended ids disjoint from indexed
+    * ids; re-adding a retracted id needs a compaction first (the
+    * tombstone filters by id, not by file age).
+    *
+    * Crash-safe via the manifest protocol: a torn append (any crash
+    * before its manifests commit) leaves files that the next
+    * open/append/compaction repairs away. Tables commit in DECLARED
+    * order, so a crash between two commits of a multi-table family
+    * leaves the earlier tables committed — for LSH, "ghost" band rows
+    * whose postings were repaired; ghosts only add candidates that the
+    * rescore's postings join drops (probe output as if the append never
+    * happened).
+    *
+    * `batchTag` makes a RETRIED append (the streaming replay path)
+    * exactly-once: each manifest commit carries the tag atomically
+    * ([[commitManifest]]), a retry skips every table whose newest
+    * manifest already carries it, and when the LAST table carries it the
+    * whole append committed and nothing runs. That matters for probe
+    * correctness, not just size: duplicated LSH postings double one side
+    * of every jaccard rescore count, and a duplicated ANN list row gives
+    * one neighbor two top-k ranks. Untagged appends keep at-least-once
+    * semantics (compaction's dedup of the LSH bands is the bounded
+    * cleanup of a retried untagged append).
+    *
+    * Holds the [[withWriterLock]] lease for the whole append:
+    * `commitManifest` snapshots the directory's CURRENT file set, so two
+    * concurrent appends would have each other's half-written files
+    * legitimized by whichever commit lands last — under the lease the
+    * second append fails loudly instead. */
+  def append[M](index: Index[M], batch: DataFrame, idCol: String,
+      srcCol: String, batchTag: Option[String] = None): Unit = {
+    requireBigint(batch, idCol)
+    val spark = batch.sparkSession
+    val specs = index.family.tables
+    withWriterLock(spark, index.path) {
+      // a retried append must not compound a previous torn one
+      specs.foreach(t => repairToManifest(spark, index.dir(t.base)))
+      def done(t: TableSpec): Boolean = batchTag.isDefined &&
+        manifestTag(spark, index.dir(t.base)) == batchTag
+      if (!done(specs.last)) {
+        val todo = (specs.init.filterNot(done) :+ specs.last).toSet
+        val rows = index.family.rows(index.meta, batch, idCol, srcCol)
+        withShared(rows) {
+          specs.zip(rows.tables).filter(r => todo(r._1)).foreach {
+            case (t, df) =>
+              saveBucketed(index, t, df, "append")
+              commitManifest(spark, index.dir(t.base), batchTag)
+          }
+        }
+      }
+    }
+  }
+
+  /** Retract rows by id: append the ids as TOMBSTONES. Probes hide them
+    * immediately (the broadcast anti-join [[live]]); the physical rows
+    * leave the bucketed files at the next [[compact]], which also clears
+    * the tombstones. Holds the lease: a tombstone appended between a
+    * compaction's tombstones read and its clear would be silently
+    * dropped — the retracted ids resurfacing (a lost update). */
+  def retract(index: Index[_], ids: DataFrame, idCol: String): Unit =
+    withWriterLock(ids.sparkSession, index.path) {
+      appendTombstones(index.path, ids, idCol)
+    }
+
+  /** Compact: rewrite every table into the NEXT generation's directories
+    * with the same bucket spec — one file per bucket — applying and then
+    * clearing any tombstones. Appends add one file per bucket per batch,
+    * so a streaming-cadence ingest grows each bucket's file count
+    * without bound; this rewrite keeps the exchange-free probe scan from
+    * drowning in small files.
+    *
+    * Crash-safe by the snapshot discipline: the new generation is
+    * written COMPLETELY, committed by its `_compact_cN` marker, and only
+    * then do the catalog re-point, tombstone clear and retention sweep
+    * run. A crash before the marker leaves the current generation
+    * authoritative (the torn directories are swept by the next
+    * compaction); a crash after it leaves a committed generation that
+    * [[open]] resolves, with the remaining steps idempotent. Holds the
+    * lease: a second concurrent compaction throws; a crashed holder's
+    * lease expires by age.
+    *
+    * Returns the handle at the new generation (the session's catalog
+    * tables are re-pointed in place, so existing probe code keeps
+    * working). */
+  def compact[M](spark: SparkSession, index: Index[M]): Index[M] =
+    withWriterLock(spark, index.path) {
+      val bases = index.family.tables.map(_.base)
+      val next = index.copy(
+        gen = nextGen(spark, index.path, bases, index.gen))
+      val f = fs(spark, index.path)
+      bases.foreach(b =>
+        f.delete(new org.apache.hadoop.fs.Path(next.dir(b)), true))
+      val tombs = tombstones(spark, index.path)
+      index.family.tables.foreach(t =>
+        rewriteBucketed(spark, index, next, t, tombs))
+      // COMMIT: everything below is post-commit housekeeping
+      writeMarker(spark, index.path, next.gen)
+      bases.foreach(b => spark.sql(s"DROP TABLE IF EXISTS ${index.table(b)}"))
+      register(spark, next)
+      clearTombstones(spark, index.path)
+      sweepOld(spark, index.path, bases, next.gen)
+      next
+    }
+
+  /** Compact only when appends have actually fragmented the index: if
+    * any table's fullest bucket holds more than `maxFilesPerBucket`
+    * files, run [[compact]]; otherwise return the handle unchanged. The
+    * streaming ingest loops call this after each absorb so a long-running
+    * stream bounds its own small-file growth. */
+  def maybeCompact[M](spark: SparkSession, index: Index[M],
+      maxFilesPerBucket: Int): Index[M] = {
+    val worst = index.family.tables
+      .map(t => IndexGen.maxFilesPerBucket(spark, index.dir(t.base))).max
+    if (worst > maxFilesPerBucket) compact(spark, index) else index
+  }
+
+  /** Idempotent streaming absorb: [[append]] micro-batch `batchId`
+    * unless it already left its `_absorbed_<batchId>` marker (a replayed
+    * micro-batch must not land twice). The append carries the batchId as
+    * its manifest tag, closing the crash window BETWEEN the append's last
+    * manifest commit and the marker write: the replay re-enters the
+    * append, finds its own tag committed, and appends nothing. Returns
+    * true when the append ran (or was recognized as already committed). */
+  def absorbOnce(index: Index[_], batch: DataFrame, idCol: String,
+      srcCol: String, batchId: Long): Boolean = {
+    val f = fs(batch.sparkSession, index.path)
+    val marker = new org.apache.hadoop.fs.Path(index.path,
+      s"_absorbed_$batchId")
+    if (f.exists(marker)) false
+    else {
+      append(index, batch, idCol, srcCol, batchTag = Some(s"absorb_$batchId"))
+      f.create(marker, true).close()
+      true
+    }
+  }
+
+  /** Persisted ids must be BIGINT: the tables are re-registered from DDL
+    * in later sessions. Checked on write, append and retract. */
+  private def requireBigint(df: DataFrame, idCol: String): Unit = {
+    val t = df.schema(idCol).dataType
+    require(t == org.apache.spark.sql.types.LongType,
+      s"persisted index ids must be BIGINT (cross-session DDL), got $t")
+  }
+
+  private def withShared[T](rows: Rows)(body: => T): T = {
+    rows.shared.foreach(
+      _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    try body finally rows.shared.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Run independent jobs concurrently; a single job runs inline. Awaits
+    * EVERY job even when one throws: pool.shutdown() does not cancel an
+    * in-flight write, and returning early would unpersist a shared
+    * intermediate under it and leave a committed table behind the
+    * exception. */
+  private def concurrently(jobs: Seq[() => Unit]): Unit =
+    if (jobs.size == 1) jobs.head()
+    else {
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration.Duration
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.size)
+      implicit val ec: ExecutionContext =
+        ExecutionContext.fromExecutorService(pool)
+      try {
+        val fs = jobs.map(j => Future(j()))
+        fs.foreach(Await.ready(_, Duration.Inf))
+        fs.foreach(Await.result(_, Duration.Inf))
+      } finally pool.shutdown()
+    }
+
+  /** The one bucketed write (fresh write, append and compaction): bucketed
+    * writes emit one file per (task, bucket), so the rows are first
+    * repartitioned on the bucket columns with bucketing's own
+    * murmur3-pmod hash — every task then holds exactly one bucket, and a
+    * write leaves numBuckets files, not up to numBuckets² (paid again by
+    * every probe's file-open/footer pass, and
+    * inflating the [[maxFilesPerBucket]] compaction trigger). */
+  private def saveBucketed[M](idx: Index[M], t: TableSpec, rows: DataFrame,
+      mode: String): Unit = {
+    val n = idx.family.numBuckets(idx.meta)
+    rows.repartition(n, t.bucketCols.map(col): _*)
+      .write.mode(mode)
+      .bucketBy(n, t.bucketCols.head, t.bucketCols.tail: _*)
+      .option("path", idx.dir(t.base))
+      .saveAsTable(idx.table(t.base))
+  }
+
+  /** Create (or re-point) every catalog table at ITS generation's
+    * location ([[ensureTable]] semantics). */
+  private def register[M](spark: SparkSession, idx: Index[M]): Unit =
+    idx.family.tables.foreach { t =>
+      val (table, dir) = (idx.table(t.base), idx.dir(t.base))
+      ensureTable(spark, table, dir,
+        s"""CREATE TABLE $table (${t.columns})
+           |USING parquet
+           |CLUSTERED BY (${t.bucketCols.mkString(", ")})
+           |INTO ${idx.family.numBuckets(idx.meta)} BUCKETS
+           |LOCATION '$dir'""".stripMargin)
+    }
+
+  // ------------------------------------------------------- meta.json codec
+  //
+  // Fixed field order, no JSON library on the engine classpath. The file
+  // resolves through the SESSION's hadoopConfiguration ([[fs]]), like
+  // every other index-file touch: a default `new Configuration()` would
+  // ignore a Spark-conf-only `fs.defaultFS`/object-store credential and
+  // write the meta to a different filesystem than probes read it from.
+
+  private[graft] def encodeMeta[M](family: Family[M], meta: M): String =
+    family.metaFields(meta).map {
+      case (k, v: String) => s""""$k":"$v""""
+      case (k, v) => s""""$k":$v"""
+    }.mkString("{", ",", "}")
+
+  private[graft] def decodeMeta[M](family: Family[M], raw: String,
+      file: String): M = {
+    val fields = "\"([^\"]+)\":(?:\"([^\"]*)\"|([^,}]*))".r
+      .findAllMatchIn(raw)
+      .map(m => m.group(1) -> Option(m.group(2)).getOrElse(m.group(3)))
+      .toMap
+    family.metaOf(k => fields.getOrElse(k,
+      throw new IllegalArgumentException(
+        s"index meta missing field $k in $file")))
+  }
+
+  private def writeMeta[M](spark: SparkSession, idx: Index[M]): Unit = {
+    val file = s"${idx.path}/meta.json"
+    val out = fs(spark, file).create(new org.apache.hadoop.fs.Path(file), true)
+    try out.write(encodeMeta(idx.family, idx.meta).getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  private def readMeta[M](spark: SparkSession, family: Family[M],
+      path: String): M = {
+    val file = s"$path/meta.json"
+    val in = fs(spark, file).open(new org.apache.hadoop.fs.Path(file))
+    val raw =
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    decodeMeta(family, raw, file)
+  }
+
+  // ------------------------------------------------------------ protocol
+
+  private[graft] def fs(spark: SparkSession,
       path: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def dirFor(path: String, base: String, gen: Int): String =
-    if (gen == 0) s"$path/$base" else s"$path/$base.c$gen"
-
   /** Newest COMMITTED generation at `path` (0 = uncompacted layout).
     * Strict `_compact_c<digits>` match — junk names never resolve. */
-  def resolveGen(spark: SparkSession, path: String): Int = {
+  private def resolveGen(spark: SparkSession, path: String): Int = {
     val p = new org.apache.hadoop.fs.Path(path)
     val f = fs(spark, path)
     if (!f.exists(p)) 0
@@ -49,7 +399,7 @@ private[graft] object IndexGen {
 
   /** 1 + max over committed AND torn generation artifacts, so a torn
     * previous compaction attempt is never half-reused. */
-  def nextGen(spark: SparkSession, path: String, bases: Seq[String],
+  private def nextGen(spark: SparkSession, path: String, bases: Seq[String],
       currentGen: Int): Int = {
     val dirRe = ("^(?:" + bases.map(java.util.regex.Pattern.quote)
       .mkString("|") + ")\\.c(\\d+)$").r
@@ -66,7 +416,7 @@ private[graft] object IndexGen {
   }
 
   /** COMMIT a generation: everything after this call is housekeeping. */
-  def writeMarker(spark: SparkSession, path: String, gen: Int): Unit =
+  private def writeMarker(spark: SparkSession, path: String, gen: Int): Unit =
     fs(spark, path)
       .create(new org.apache.hadoop.fs.Path(s"$path/_compact_c$gen"), true)
       .close()
@@ -74,7 +424,7 @@ private[graft] object IndexGen {
   /** Retention: superseded generations (and their markers, and the
     * generation-0 dirs once a newer generation is committed) are never
     * read again. */
-  def sweepOld(spark: SparkSession, path: String, bases: Seq[String],
+  private def sweepOld(spark: SparkSession, path: String, bases: Seq[String],
       keepGen: Int): Unit = {
     val f = fs(spark, path)
     val gOf = ("^(?:" + bases.map(java.util.regex.Pattern.quote)
@@ -93,7 +443,7 @@ private[graft] object IndexGen {
   /** Overwrite-time clean: a fresh generation-0 write must not be
     * shadowed by a previous index's generations, filtered by its
     * tombstones, or skip-absorbed against its streaming markers. */
-  def cleanAll(spark: SparkSession, path: String,
+  private def cleanAll(spark: SparkSession, path: String,
       bases: Seq[String]): Unit = {
     val f = fs(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
@@ -111,17 +461,16 @@ private[graft] object IndexGen {
 
   /** Append retraction tombstones (`$path/tombstones`, plain parquet,
     * one BIGINT `tomb_id` column). */
-  def appendTombstones(path: String, ids: DataFrame, idCol: String): Unit = {
-    require(ids.schema(ids.schema.fieldIndex(idCol)).dataType ==
-      org.apache.spark.sql.types.LongType,
-      "persisted index ids must be BIGINT")
+  private def appendTombstones(path: String, ids: DataFrame,
+      idCol: String): Unit = {
+    requireBigint(ids, idCol)
     ids.select(col(idCol).as("tomb_id"))
       .write.mode("append").parquet(s"$path/tombstones")
   }
 
   /** Live tombstone set, or None when none have been written (the common
     * case — keeps probe plans bit-identical to the tombstone-free ones). */
-  def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
+  private[graft] def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
     val f = fs(spark, path)
     if (f.exists(p) &&
@@ -134,11 +483,11 @@ private[graft] object IndexGen {
   /** Filter an index-side frame by the live tombstones via a BROADCAST
     * anti-join — preserves the frame's bucketed partitioning, so probe
     * plans keep their no-index-side-exchange shape. */
-  def live(df: DataFrame, tombs: Option[DataFrame]): DataFrame =
+  private[graft] def live(df: DataFrame, tombs: Option[DataFrame]): DataFrame =
     tombs.fold(df)(t =>
       df.join(broadcast(t), df("id") === t("tomb_id"), "left_anti"))
 
-  def clearTombstones(spark: SparkSession, path: String): Unit =
+  private def clearTombstones(spark: SparkSession, path: String): Unit =
     fs(spark, path)
       .delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
 
@@ -244,7 +593,7 @@ private[graft] object IndexGen {
     * set (a `#tag:` header line readers of the file list skip): a
     * retried append carrying the same tag sees it via [[manifestTag]]
     * and skips the directory — the exactly-once protocol above. */
-  def commitManifest(spark: SparkSession, dir: String,
+  private[graft] def commitManifest(spark: SparkSession, dir: String,
       tag: Option[String] = None): Unit = {
     tag.foreach(t => require(!t.contains("\n"), "manifest tag is one line"))
     val f = fs(spark, dir)
@@ -264,7 +613,7 @@ private[graft] object IndexGen {
   /** The batch tag the NEWEST committed manifest carries, if any — None
     * for untagged commits (compaction rewrites, legacy manifests) and
     * for directories without a manifest. */
-  def manifestTag(spark: SparkSession, dir: String): Option[String] = {
+  private[graft] def manifestTag(spark: SparkSession, dir: String): Option[String] = {
     val f = fs(spark, dir)
     manifestVersions(f, dir).lastOption.flatMap { case (_, mp) =>
       readManifestFile(f, mp).linesIterator
@@ -275,7 +624,7 @@ private[graft] object IndexGen {
   /** Delete every data file the NEWEST committed manifest does not name
     * (torn-append leftovers). No-op without a manifest. Returns the
     * removed count. */
-  def repairToManifest(spark: SparkSession, dir: String): Int = {
+  private[graft] def repairToManifest(spark: SparkSession, dir: String): Int = {
     val f = fs(spark, dir)
     manifestVersions(f, dir).lastOption match {
       case None => 0
@@ -295,7 +644,7 @@ private[graft] object IndexGen {
     * crash-simulation support for specs and the graded q215: restoring a
     * pre-append snapshot with [[restoreManifest]] reproduces the exact
     * on-disk state of a crash before that append's manifest commit. */
-  def manifestSnapshot(spark: SparkSession, dir: String): (String, String) = {
+  private[graft] def manifestSnapshot(spark: SparkSession, dir: String): (String, String) = {
     val f = fs(spark, dir)
     val (_, p) = manifestVersions(f, dir).last
     (p.getName, readManifestFile(f, p))
@@ -303,7 +652,7 @@ private[graft] object IndexGen {
 
   /** Re-install a [[manifestSnapshot]], deleting every newer version the
     * append being "crashed away" committed. */
-  def restoreManifest(spark: SparkSession, dir: String,
+  private[graft] def restoreManifest(spark: SparkSession, dir: String,
       snap: (String, String)): Unit = {
     val f = fs(spark, dir)
     manifestVersions(f, dir).foreach { case (_, p) => f.delete(p, false) }
@@ -369,7 +718,7 @@ private[graft] object IndexGen {
     * lease and someone else re-locked), release throws instead of
     * deleting the new holder's lock — the triple-race that r15's
     * unverified `delete` turned into a silent double-writer. */
-  def withWriterLock[T](spark: SparkSession, path: String,
+  private[graft] def withWriterLock[T](spark: SparkSession, path: String,
       staleMs: Long = 60L * 60 * 1000)(body: => T): T = {
     val f = fs(spark, path)
     val lock = new org.apache.hadoop.fs.Path(path, "_writer_lock")
@@ -486,7 +835,7 @@ private[graft] object IndexGen {
     * bucketed file names). The compaction trigger statistic: appends add
     * one file per bucket per batch, and a probe scan's open/footer
     * overhead grows with exactly this number. Missing dir counts 0. */
-  def maxFilesPerBucket(spark: SparkSession, dir: String): Int = {
+  private[graft] def maxFilesPerBucket(spark: SparkSession, dir: String): Int = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val f = fs(spark, dir)
     if (!f.exists(p)) return 0
@@ -499,12 +848,9 @@ private[graft] object IndexGen {
       .foldLeft(0)((m, g) => math.max(m, g.size))
   }
 
-  /** Rewrite one bucketed table into a generation directory with ONE
-    * file per bucket: bucketed writes emit one file per (task, bucket),
-    * and repartitioning on the bucket columns uses the same
-    * murmur3-pmod hash as the bucket spec, so every task holds exactly
-    * one bucket. The source is read as PLAIN parquet, not through the
-    * bucketed catalog table: a bucketed scan would claim the target
+  /** Rewrite one table of `index` into a generation directory with ONE
+    * file per bucket ([[saveBucketed]]). The source is read as PLAIN
+    * parquet, not through the bucketed catalog table: a bucketed scan would claim the target
     * partitioning, the optimizer would drop the "redundant" repartition,
     * and DisableUnnecessaryBucketedScan would fall back to per-file
     * splits — reproducing one file per INPUT split instead of per
@@ -519,28 +865,27 @@ private[graft] object IndexGen {
     * candidate volume until a compaction). The distinct is one extra
     * hash exchange on rows that are small fixed-width tuples — cheap
     * next to the rewrite itself, and bounded to compaction time. */
-  def rewriteBucketed(spark: SparkSession, srcDir: String, dstDir: String,
-      tmpTable: String, numBuckets: Int, bucketCols: Seq[String],
-      tombs: Option[DataFrame], dedup: Boolean = false): Unit = {
+  private def rewriteBucketed[M](spark: SparkSession, index: Index[M],
+      next: Index[M], t: TableSpec, tombs: Option[DataFrame]): Unit = {
+    val srcDir = index.dir(t.base)
     // the plain-parquet source read would otherwise LEGITIMIZE a torn
     // append's leftover files into the new generation
     repairToManifest(spark, srcDir)
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
+    // written through a scratch catalog table: the index's own tables
+    // keep pointing at the current generation until the commit
+    val scratch = next.copy(name = s"${index.name}_compacting")
+    spark.sql(s"DROP TABLE IF EXISTS ${scratch.table(t.base)}")
     val src = live(spark.read.parquet(srcDir), tombs)
-    val rows = if (dedup) src.distinct() else src
-    rows.repartition(numBuckets, bucketCols.map(col): _*)
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .option("path", dstDir)
-      .saveAsTable(tmpTable)
-    spark.sql(s"DROP TABLE $tmpTable") // external: files stay
-    commitManifest(spark, dstDir)
+    saveBucketed(scratch, t, if (t.dedup) src.distinct() else src,
+      "overwrite")
+    spark.sql(s"DROP TABLE ${scratch.table(t.base)}") // external: files stay
+    commitManifest(spark, next.dir(t.base))
   }
 
   /** Create (or re-point) a catalog table at a generation's location.
     * A table registered against a superseded generation is dropped and
     * recreated — external DDL, so no data moves. */
-  def ensureTable(spark: SparkSession, table: String, dir: String,
+  private def ensureTable(spark: SparkSession, table: String, dir: String,
       ddl: String): Unit = {
     def currentLocation: Option[String] =
       spark.sql(s"DESCRIBE FORMATTED $table").collect()

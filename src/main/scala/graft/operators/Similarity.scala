@@ -878,7 +878,7 @@ object Similarity {
       // persisted index's bucketed scan (exchange-free probes are the
       // point of AnnIndex) and made the inline path's cent_id
       // repartition fail to satisfy the join's distribution — an extra
-      // full-corpus exchange (AnnIndexSpec pins the plan)
+      // full-corpus exchange (IndexCrashSpec pins the plan)
       .select(Seq(col("id"),
         col("cent_id").cast(c.schema("cent_id").dataType).as("cent_id"),
         col("qnrm"), col("__qc")) ++
@@ -907,24 +907,52 @@ object Similarity {
     * (coarse centroids + per-subspace codebooks — driver-metadata-sized,
     * the [[trainCentroids]] stance) plus the storage bucket count.
     * Probes MUST score with the identical model or codes silently decode
-    * against the wrong codebooks — [[readAnnIndex]] replays it from the
-    * index's own meta file, exactly the LshIndexMeta contract. */
+    * against the wrong codebooks — [[IndexGen.open]] replays it from the
+    * index's own meta file. */
   case class AnnIndexMeta(model: PqModel, numBuckets: Int)
 
-  /** Handle to a persisted IVF-PQ ANN index: ONE bucketed catalog table
-    * `{name}_lists` (id, cent_id, codes, rnorm) CLUSTERED BY cent_id —
-    * the inverted-list layout, so a probe joins it with NO exchange on
-    * the index side (only the query side shuffles) — plus the model
-    * meta. Generations/markers/tombstones follow the [[Dedup.LshIndex]]
-    * discipline ([[IndexGen]]). This is the production ANN shape at
+  type AnnIndex = IndexGen.Index[AnnIndexMeta]
+
+  /** The persisted IVF-PQ ANN index family: ONE bucketed table `lists`
+    * (id, cent_id, codes, rnorm) CLUSTERED BY cent_id — the inverted-list
+    * layout, so a probe joins it with NO exchange on the index side (only
+    * the query side shuffles). This is the production ANN shape at
     * 100 TB: the lists hold m one-byte codes + one double per vector
     * (64x smaller than float64 at m=8, dim=64), the index is written
     * once and probed/appended per ingest, and nothing ever re-encodes
-    * or re-shuffles the corpus side. */
-  case class AnnIndex(name: String, path: String, meta: AnnIndexMeta,
-      gen: Int = 0) {
-    def listsTable: String = s"${name}_lists"
-    def listsDir: String = IndexGen.dirFor(path, "lists", gen)
+    * or re-shuffles the corpus side. Rows are encoded with the
+    * PERSISTED model — appends never retrain, so codes stay decodable.
+    *
+    * meta.json layout: scalars + `cents` (rows ';'-joined, components
+    * ' '-joined; row index = dense cent_id) + `codebooks` (subspaces
+    * '|'-joined, each k rows ';'-joined; row index = code). Doubles
+    * round-trip exactly through Double.toString/parseDouble. */
+  object Ann extends IndexGen.Family[AnnIndexMeta] {
+    val tables = Seq(IndexGen.TableSpec("lists",
+      "id BIGINT, cent_id INT, codes ARRAY<TINYINT>, rnorm DOUBLE",
+      Seq("cent_id")))
+    def numBuckets(m: AnnIndexMeta): Int = m.numBuckets
+    def metaFields(meta: AnnIndexMeta): Seq[(String, Any)] = {
+      val m = meta.model
+      require(m.residualCentroids.nonEmpty,
+        "persisted ANN indexes store residual models")
+      def row(v: Seq[Double]) = v.map(_.toString).mkString(" ")
+      Seq("m" -> m.m, "ds" -> m.ds, "numBuckets" -> meta.numBuckets,
+        "cents" -> m.residualCentroids.get.map(c => row(c._2)).mkString(";"),
+        "codebooks" -> m.codebooks.map(_.map(c => row(c._2)).mkString(";"))
+          .mkString("|"))
+    }
+    def metaOf(f: String => String): AnnIndexMeta = {
+      def rows(s: String): Seq[(Int, Seq[Double])] =
+        s.split(";").toSeq.map(_.split(" ").toSeq.map(_.toDouble))
+          .zipWithIndex.map { case (v, i) => (i, v) }
+      AnnIndexMeta(PqModel(f("m").toInt, f("ds").toInt,
+          f("codebooks").split("\\|").toSeq.map(rows), Some(rows(f("cents")))),
+        f("numBuckets").toInt)
+    }
+    def rows(meta: AnnIndexMeta, batch: DataFrame, idCol: String,
+        vecCol: String): IndexGen.Rows =
+      IndexGen.Rows(Seq(pqEncode(batch, idCol, vecCol, meta.model)))
   }
 
   /** The production IVF sizing rule: `nlist` grows with the SQUARE ROOT
@@ -948,65 +976,24 @@ object Similarity {
     p
   }
 
-  /** Build and PERSIST an IVF-PQ index: train the residual model
-    * ([[pqTrainResidual]] — deterministic sampled path), encode the
-    * corpus ([[pqEncode]]), and write the lists bucketed by cent_id
-    * (one file per bucket — the repartition uses bucketing's own hash),
-    * with the model serialized to `meta.json`. Overwrites any prior
-    * index at `path` (including stale generations and tombstones). */
+  /** Build and PERSIST an IVF-PQ index ([[Ann]]) with
+    * [[IndexGen.write]]. The family's training step trains the residual
+    * model ([[pqTrainResidual]] — deterministic sampled path); the corpus
+    * is encoded with it ([[pqEncode]]) and it is serialized to
+    * `meta.json`. */
   def writeAnnIndex(corpus: DataFrame, idCol: String, vecCol: String,
       path: String, name: String, m: Int = 8, k: Int = 16,
       nlist: Int = 64, numBuckets: Int = 16,
-      coarseTrainIters: Int = 0): AnnIndex = {
-    require(corpus.schema(corpus.schema.fieldIndex(idCol)).dataType ==
-      org.apache.spark.sql.types.LongType,
-      "persisted index ids must be BIGINT (cross-session DDL)")
-    val spark = corpus.sparkSession
-    val model = pqTrainResidual(corpus, idCol, vecCol, m, k, nlist,
-      coarseTrainIters)
-    val idx = AnnIndex(name, path, AnnIndexMeta(model, numBuckets))
-    spark.sql(s"DROP TABLE IF EXISTS ${idx.listsTable}")
-    IndexGen.cleanAll(spark, path, Seq("lists"))
-    pqEncode(corpus, idCol, vecCol, model)
-      .repartition(numBuckets, col("cent_id"))
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "cent_id")
-      .option("path", idx.listsDir)
-      .saveAsTable(idx.listsTable)
-    IndexGen.commitManifest(spark, idx.listsDir)
-    writeAnnMeta(spark, s"$path/meta.json", idx.meta)
-    idx
-  }
-
-  /** Open a persisted ANN index from `path`: replay the model from
-    * meta.json, resolve the newest committed compaction generation, and
-    * register (or re-point) the bucketed catalog table — the
-    * [[Dedup.readLshIndex]] contract. */
-  def readAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      name: String): AnnIndex = {
-    val meta = readAnnMeta(spark, s"$path/meta.json")
-    val idx = AnnIndex(name, path, meta,
-      gen = IndexGen.resolveGen(spark, path))
-    // open-time recovery: drop a torn batch append's leftover files
-    IndexGen.repairToManifest(spark, idx.listsDir)
-    registerAnnTable(spark, idx)
-    idx
-  }
-
-  private def registerAnnTable(spark: org.apache.spark.sql.SparkSession,
-      idx: AnnIndex): Unit =
-    IndexGen.ensureTable(spark, idx.listsTable, idx.listsDir,
-      s"""CREATE TABLE ${idx.listsTable}
-         |(id BIGINT, cent_id INT, codes ARRAY<TINYINT>, rnorm DOUBLE)
-         |USING parquet
-         |CLUSTERED BY (cent_id) INTO ${idx.meta.numBuckets} BUCKETS
-         |LOCATION '${idx.listsDir}'""".stripMargin)
+      coarseTrainIters: Int = 0): AnnIndex =
+    IndexGen.write(Ann, corpus, idCol, vecCol, path, name)(
+      AnnIndexMeta(pqTrainResidual(corpus, idCol, vecCol, m, k, nlist,
+        coarseTrainIters), numBuckets))
 
   /** Top-k ANN through the PERSISTED index: identical scoring to
     * [[pqTopK]] (the shared [[pqProbeLists]] — LUT ADC, round-6
     * ranking), with the corpus side read from the bucketed lists table:
     * pre-partitioned on exactly the join key, so the probe plan carries
-    * ONE exchange (the query side; AnnIndexSpec pins it). Tombstoned ids
+    * ONE exchange (the query side; IndexCrashSpec pins it). Tombstoned ids
     * are filtered by a broadcast anti-join that preserves the bucketed
     * partitioning. */
   def probeAnnIndex(index: AnnIndex, queries: DataFrame,
@@ -1020,7 +1007,7 @@ object Similarity {
         "residual model"))
     val centroids = cents.map { case (cid, cv) => (cid.toLong, cv) }
       .toDF("cent_id", "cent_vec")
-    val c = IndexGen.live(spark.table(index.listsTable),
+    val c = IndexGen.live(spark.table(index.table("lists")),
       IndexGen.tombstones(spark, index.path))
     pqProbeLists(c, queries, queryIdCol, queryVecCol, k, model,
       centroids, nprobe)
@@ -1066,142 +1053,6 @@ object Similarity {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** Absorb new vectors INTO the persisted index: encode with the
-    * PERSISTED model (never retrained — codes must stay decodable
-    * against the index's codebooks) and append bucketed files, which the
-    * bucketed scan groups back into the same partitions (no probe-plan
-    * regression; compaction is the small-files counter-move). Caller
-    * contract: appended ids disjoint from indexed ids. Holds the
-    * [[IndexGen.withWriterLock]] lease: commitManifest snapshots the
-    * directory's CURRENT file set, so a concurrent append would have its
-    * half-written files legitimized by this one's commit — under the
-    * lease it fails loudly instead.
-    *
-    * `batchTag` makes a RETRIED append exactly-once (the streaming
-    * replay path): the tag commits atomically with the manifest, and a
-    * retry whose tag already heads the newest manifest appends nothing.
-    * This matters for probe CORRECTNESS, not just index size — a
-    * duplicated list row gives the same neighbor two of the top-k ranks
-    * until compaction. Untagged appends keep at-least-once semantics. */
-  def appendToAnnIndex(index: AnnIndex, batch: DataFrame, idCol: String,
-      vecCol: String, batchTag: Option[String] = None): Unit = {
-    require(batch.schema(batch.schema.fieldIndex(idCol)).dataType ==
-      org.apache.spark.sql.types.LongType,
-      "persisted index ids must be BIGINT")
-    val spark = batch.sparkSession
-    IndexGen.withWriterLock(spark, index.path) {
-      // manifest protocol (IndexGen): repair any previous torn append,
-      // then commit this one's file set only after the data write
-      // completes — a crash in between leaves files the next
-      // open/append repairs away
-      IndexGen.repairToManifest(spark, index.listsDir)
-      val done = batchTag.isDefined &&
-        IndexGen.manifestTag(spark, index.listsDir) == batchTag
-      if (!done) {
-        pqEncode(batch, idCol, vecCol, index.meta.model)
-          .repartition(index.meta.numBuckets, col("cent_id"))
-          .write.mode("append")
-          .bucketBy(index.meta.numBuckets, "cent_id")
-          .option("path", index.listsDir)
-          .saveAsTable(index.listsTable)
-        IndexGen.commitManifest(spark, index.listsDir, batchTag)
-      }
-    }
-  }
-
-  /** Retract vectors: id tombstones hide them from probes immediately
-    * ([[IndexGen.appendTombstones]]); the rows leave the files at the
-    * next [[compactAnnIndex]]. Re-adding a retracted id requires a
-    * compaction first (the tombstone filters by id, not file age).
-    * Leased like every other mutation: a tombstone landing between a
-    * compaction's tombstones read and its clearTombstones would be
-    * silently dropped. */
-  def retractFromAnnIndex(index: AnnIndex, ids: DataFrame,
-      idCol: String): Unit =
-    IndexGen.withWriterLock(ids.sparkSession, index.path) {
-      IndexGen.appendTombstones(index.path, ids, idCol)
-    }
-
-  /** Compact the lists table: rewrite into the next generation with the
-    * same bucket spec — one file per bucket — applying and clearing
-    * tombstones; commit-marker + retention per [[IndexGen]]. Same
-    * crash-safety and single-writer contract as
-    * [[Dedup.compactLshIndex]]. */
-  def compactAnnIndex(spark: org.apache.spark.sql.SparkSession,
-      index: AnnIndex): AnnIndex =
-    IndexGen.withWriterLock(spark, index.path) {
-      val next = index.copy(
-        gen = IndexGen.nextGen(spark, index.path, Seq("lists"), index.gen))
-      IndexGen.fs(spark, index.path)
-        .delete(new org.apache.hadoop.fs.Path(next.listsDir), true)
-      IndexGen.rewriteBucketed(spark, index.listsDir, next.listsDir,
-        s"${index.name}_lists_compacting", index.meta.numBuckets,
-        Seq("cent_id"), IndexGen.tombstones(spark, index.path))
-      IndexGen.writeMarker(spark, index.path, next.gen)
-      spark.sql(s"DROP TABLE IF EXISTS ${index.listsTable}")
-      registerAnnTable(spark, next)
-      IndexGen.clearTombstones(spark, index.path)
-      IndexGen.sweepOld(spark, index.path, Seq("lists"), next.gen)
-      next
-    }
-
-  /** Compact only when appends have fragmented the lists: if the
-    * fullest bucket holds more than `maxFilesPerBucket` files, run
-    * [[compactAnnIndex]]; otherwise return the handle unchanged — the
-    * [[Dedup.maybeCompactLshIndex]] trigger for the ANN ingest loop
-    * ([[graft.streaming.VecStream.ingestAnnStream]]). */
-  def maybeCompactAnnIndex(spark: org.apache.spark.sql.SparkSession,
-      index: AnnIndex, maxFilesPerBucket: Int): AnnIndex =
-    if (IndexGen.maxFilesPerBucket(spark, index.listsDir)
-        > maxFilesPerBucket)
-      compactAnnIndex(spark, index)
-    else index
-
-  /** meta.json codec for [[AnnIndexMeta]] — hand-rolled like the
-    * LshIndexMeta one (no JSON library on the engine classpath). Doubles
-    * round-trip exactly through Double.toString/parseDouble. Layout:
-    * scalars + `cents` (rows ';'-joined, components ' '-joined; row
-    * index = dense cent_id) + `codebooks` (subspaces '|'-joined, each
-    * k rows ';'-joined; row index = code). */
-  private def writeAnnMeta(spark: org.apache.spark.sql.SparkSession,
-      file: String, meta: AnnIndexMeta): Unit = {
-    val m = meta.model
-    require(m.residualCentroids.nonEmpty,
-      "persisted ANN indexes store residual models")
-    def row(v: Seq[Double]) = v.map(_.toString).mkString(" ")
-    val cents = m.residualCentroids.get.map(c => row(c._2)).mkString(";")
-    val cbs = m.codebooks.map(_.map(c => row(c._2)).mkString(";"))
-      .mkString("|")
-    val body = s"""{"m":${m.m},"ds":${m.ds},""" +
-      s""""numBuckets":${meta.numBuckets},""" +
-      s""""cents":"$cents","codebooks":"$cbs"}"""
-    val p = new org.apache.hadoop.fs.Path(file)
-    val out = IndexGen.fs(spark, file).create(p, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readAnnMeta(spark: org.apache.spark.sql.SparkSession,
-      file: String): AnnIndexMeta = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    val in = IndexGen.fs(spark, file).open(p)
-    val body =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def field(n: String): String =
-      ("\"" + n + "\":\"?([^\",}]*)\"?").r.findFirstMatchIn(body)
-        .getOrElse(throw new IllegalArgumentException(
-          s"AnnIndex meta missing field $n in $file")).group(1)
-    def rows(s: String): Seq[Seq[Double]] =
-      s.split(";").toSeq.map(_.split(" ").toSeq.map(_.toDouble))
-    val cents = rows(field("cents")).zipWithIndex
-      .map { case (v, i) => (i, v) }
-    val cbs = field("codebooks").split("\\|").toSeq.map(b =>
-      rows(b).zipWithIndex.map { case (v, i) => (i, v) })
-    AnnIndexMeta(
-      PqModel(field("m").toInt, field("ds").toInt, cbs, Some(cents)),
-      field("numBuckets").toInt)
   }
 
   /** k-center greedy (farthest-point) coreset selection — Gonzalez 1985

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Cleaning, Text, Vec}
-import graft.operators.{AllPairs, Boilerplate, Classify, Dedup, Mix, Multimodal, Sessionize, Similarity, SuffixArray}
+import graft.operators.{AllPairs, Boilerplate, Classify, Dedup, IndexGen, Mix, Multimodal, Sessionize, Similarity, SuffixArray}
 import graft.pipeline.{Fill, GoldenRecord, Validate}
 
 import graft.queries.Queries.QueryDef
@@ -1361,9 +1361,9 @@ private[queries] object QueriesAnn {
     // the encoded lists actually written once (Similarity.writeAnnIndex:
     // (id, cent_id, codes, rnorm) bucketed by cent_id, model in
     // meta.json) and probed through the catalog table
-    // (readAnnIndex/probeAnnIndex): the probe joins the lists
+    // (IndexGen.open/probeAnnIndex): the probe joins the lists
     // pre-partitioned on exactly its key with NO index-side exchange
-    // (AnnIndexSpec pins the plan), only the query side shuffles — the
+    // (IndexCrashSpec pins the plan), only the query side shuffles — the
     // q194 storage argument applied to ANN. Identical recall output
     // through the persisted path is the equivalence evidence: the oracle
     // is q200's verbatim (model training, encode, routing, ADC and the
@@ -1382,7 +1382,7 @@ private[queries] object QueriesAnn {
         val name = "q203_idx_" + path.takeRight(12)
         Similarity.writeAnnIndex(e, "vec_id", "vec", path, name,
           m = 8, k = 16, nlist = 64, numBuckets = 16)
-        val idx = Similarity.readAnnIndex(s, path, name)
+        val idx = IndexGen.open(s, Similarity.Ann, path, name)
         val approx = Similarity.probeAnnIndex(idx, q, "qid", "qvec",
             k = 10, nprobe = 4)
           .select(col("query_id"), col("neighbor_id"))
@@ -1568,7 +1568,7 @@ private[queries] object QueriesAnn {
         val name = "q214_idx_" + base.takeRight(12)
         Similarity.writeAnnIndex(e, "vec_id", "vec", idxPath, name,
           m = 8, k = 16, nlist = 64, numBuckets = 16)
-        val idx = Similarity.readAnnIndex(s, idxPath, name)
+        val idx = IndexGen.open(s, Similarity.Ann, idxPath, name)
         // drain 1: batch1 lands, is probed against base, then absorbed
         b1raw.coalesce(1).write.mode("append").parquet(vecsDir)
         VecStream.ingestAnnStream(s, vecsDir, idx, outDir, ckpt,
@@ -1752,7 +1752,7 @@ private[queries] object QueriesAnn {
         val name = "q217_idx_" + path.takeRight(12)
         Similarity.writeAnnIndex(e, "vec_id", "vec", path, name,
           m = 8, k = 64, nlist = 64, numBuckets = 16)
-        val idx = Similarity.readAnnIndex(s, path, name)
+        val idx = IndexGen.open(s, Similarity.Ann, path, name)
         val approx = Similarity.probeAnnIndexRerank(idx, q, "qid", "qvec",
             k = 10, vectors = e, vecIdCol = "vec_id", vecCol = "vec",
             nprobe = 48, candK = 500)
@@ -1931,7 +1931,7 @@ private[queries] object QueriesAnn {
         val name = "q220_idx_" + path.takeRight(12)
         Similarity.writeAnnIndex(e, "vec_id", "vec", path, name,
           m = 8, k = 256, nlist = nlist, numBuckets = 16)
-        val idx = Similarity.readAnnIndex(s, path, name)
+        val idx = IndexGen.open(s, Similarity.Ann, path, name)
         val approx = Similarity.probeAnnIndexRerank(idx, q, "qid", "qvec",
             k = 10, vectors = e, vecIdCol = "vec_id", vecCol = "vec",
             nprobe = nprobe, candK = candK)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Cleaning, Text, Vec}
-import graft.operators.{AllPairs, Boilerplate, Classify, Dedup, Mix, Multimodal, Sessionize, Similarity, SuffixArray}
+import graft.operators.{AllPairs, Boilerplate, Classify, Dedup, IndexGen, Mix, Multimodal, Sessionize, Similarity, SuffixArray}
 import graft.pipeline.{Fill, GoldenRecord, Validate}
 
 import graft.queries.Queries.QueryDef
@@ -1259,8 +1259,8 @@ private[queries] object QueriesDedup {
     // ingest path with the corpus side actually written once
     // (Dedup.writeLshIndex: bands bucketed by (band,bucket), postings
     // bucketed by id) and probed through the catalog tables
-    // (readLshIndex/probeLshIndex): the probe join's index side scans
-    // pre-partitioned with NO exchange (LshIndexSpec pins the plan), only
+    // (IndexGen.open/probeLshIndex): the probe join's index side scans
+    // pre-partitioned with NO exchange (IndexCrashSpec pins the plan), only
     // the batch shuffles. Same exact-Jaccard oracle as q100 — identical
     // output through a different storage path is the equivalence evidence.
     QueryDef("q194_lsh_index",
@@ -1275,7 +1275,7 @@ private[queries] object QueriesDedup {
         val name = "q194_idx_" + path.takeRight(12)
         Dedup.writeLshIndex(d, "doc_id", "text", path, name,
           shingleSize = 3, numHashes = 64, bands = 16)
-        val idx = Dedup.readLshIndex(s, path, name)
+        val idx = IndexGen.open(s, Dedup.Lsh, path, name)
         Dedup.probeLshIndex(idx, batch, "doc_id", "text", threshold = 0.7)
           .select(col("id_a"), col("id_b"),
             round(col("jaccard"), 6).as("jaccard"))
@@ -1350,7 +1350,7 @@ private[queries] object QueriesDedup {
         val name = "q202_idx_" + base.takeRight(12)
         Dedup.writeLshIndex(d, "doc_id", "text", idxPath, name,
           shingleSize = 3, numHashes = 64, bands = 16)
-        val idx = Dedup.readLshIndex(s, idxPath, name)
+        val idx = IndexGen.open(s, Dedup.Lsh, idxPath, name)
         // drain 1: batch1 lands, is probed, then absorbed
         batch1.coalesce(1).write.mode("append").parquet(docsDir)
         DocStream.ingestDedupStream(s, docsDir, idx, outDir, ckpt,
@@ -1771,7 +1771,7 @@ private[queries] object QueriesDedup {
     // protocol graded end-to-end the way q202 grades the absorb markers.
     // A COMPLETED batch append (batch1's bands and postings fully
     // written) is turned into a simulated crash-before-commit by
-    // restoring both pre-append manifests; the next readLshIndex must
+    // restoring both pre-append manifests; the next IndexGen.open must
     // repair the leftovers, so batch2's probe answers against the
     // ORIGINAL corpus only. The twin restates the exact-Jaccard closure
     // over corpus ∪ batch2 — any surviving batch1 band/posting row
@@ -1796,17 +1796,15 @@ private[queries] object QueriesDedup {
         val name = "q215_idx_" + base.takeRight(12)
         Dedup.writeLshIndex(d, "doc_id", "text", idxPath, name,
           shingleSize = 3, numHashes = 64, bands = 16)
-        val idx = Dedup.readLshIndex(s, idxPath, name)
-        val mBands = graft.operators.IndexGen.manifestSnapshot(s,
-          idx.bandsDir)
-        val mPosts = graft.operators.IndexGen.manifestSnapshot(s,
-          idx.postsDir)
+        val idx = IndexGen.open(s, Dedup.Lsh, idxPath, name)
+        val mBands = IndexGen.manifestSnapshot(s, idx.dir("bands"))
+        val mPosts = IndexGen.manifestSnapshot(s, idx.dir("posts"))
         // a COMPLETED append, then the crash-before-commit simulation
-        Dedup.appendToLshIndex(idx, batch1, "doc_id", "text")
-        graft.operators.IndexGen.restoreManifest(s, idx.bandsDir, mBands)
-        graft.operators.IndexGen.restoreManifest(s, idx.postsDir, mPosts)
+        IndexGen.append(idx, batch1, "doc_id", "text")
+        IndexGen.restoreManifest(s, idx.dir("bands"), mBands)
+        IndexGen.restoreManifest(s, idx.dir("posts"), mPosts)
         // open-time repair: batch2 must pair against the corpus ONLY
-        val repaired = Dedup.readLshIndex(s, idxPath, name)
+        val repaired = IndexGen.open(s, Dedup.Lsh, idxPath, name)
         Dedup.probeLshIndex(repaired, batch2, "doc_id", "text",
             threshold = 0.7)
           .select(col("id_a"), col("id_b"),
@@ -1859,13 +1857,13 @@ private[queries] object QueriesDedup {
         val name = "q219_idx_" + base.takeRight(12)
         Dedup.writeLshIndex(d, "doc_id", "text", idxPath, name,
           shingleSize = 3, numHashes = 64, bands = 16)
-        val idx = Dedup.readLshIndex(s, idxPath, name)
+        val idx = IndexGen.open(s, Dedup.Lsh, idxPath, name)
         // a COMMITTED tagged absorb whose marker never landed (the crash)…
-        Dedup.appendToLshIndex(idx, batch1, "doc_id", "text",
+        IndexGen.append(idx, batch1, "doc_id", "text",
           batchTag = Some("absorb_0"))
         // …then the streaming replay re-absorbs the same micro-batch
-        val reopened = Dedup.readLshIndex(s, idxPath, name)
-        graft.streaming.DocStream.absorbOnce(reopened, batch1, 0L)
+        val reopened = IndexGen.open(s, Dedup.Lsh, idxPath, name)
+        IndexGen.absorbOnce(reopened, batch1, "doc_id", "text", 0L)
         Dedup.probeLshIndex(reopened, batch2, "doc_id", "text",
             threshold = 0.7)
           .select(col("id_a"), col("id_b"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Cleaning, Text, Vec}
-import graft.operators.{AllPairs, Boilerplate, Classify, Dedup, Mix, Multimodal, Sessionize, Similarity, SuffixArray}
+import graft.operators.{AllPairs, Boilerplate, Classify, Dedup, IndexGen, Mix, Multimodal, Sessionize, Similarity, SuffixArray}
 import graft.pipeline.{Fill, GoldenRecord, Validate}
 
 import graft.queries.Queries.QueryDef
@@ -2688,7 +2688,8 @@ private[queries] object QueriesText {
         val name = "q210_idx_" + path.takeRight(12)
         graft.operators.Contam.writeNgramIndex(bench, "doc_id", "text",
           path, name, n = 13, numBuckets = 16)
-        val idx = graft.operators.Contam.readNgramIndex(s, path, name)
+        val idx = IndexGen.open(s, graft.operators.Contam.Ngram, path,
+          name)
         graft.operators.Contam.probeNgramIndex(idx, probe, "doc_id", "text")
           .withColumn("hit_frac",
             round(col("n_hits").cast("double") /
@@ -2748,7 +2749,8 @@ private[queries] object QueriesText {
         val name = "q213_idx_" + path.takeRight(12)
         graft.operators.Contam.writeNgramIndex(bench, "doc_id", "text",
           path, name, n = 13, numBuckets = 16)
-        val idx = graft.operators.Contam.readNgramIndex(s, path, name)
+        val idx = IndexGen.open(s, graft.operators.Contam.Ngram, path,
+          name)
         val (kept, dropped) = graft.operators.Contam.decontaminate(
           idx, probe, "doc_id", "text", maxHitFrac = 0.05)
         val k = kept.select(col("doc_id"), lit("kept").as("verdict"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.functions.Text
-import graft.operators.Dedup
+import graft.operators.{Dedup, IndexGen}
 
 /** Streaming document ingest with near-duplicate flagging against a static
   * index — the incremental-dedup ingest path (the streaming twin of
@@ -105,7 +105,7 @@ object DocStream {
     * near-dup pairs against everything indexed so far — exact-rescored,
     * so these are verdicts, not just flags — with the pairs appended to
     * a parquet sink, then (2) ABSORBED into the index
-    * ([[Dedup.appendToLshIndex]]), so later micro-batches dedup against
+    * ([[IndexGen.absorbOnce]]), so later micro-batches dedup against
     * earlier ones without any corpus re-scan. The index side of every
     * probe join arrives bucket-partitioned from disk; only the
     * micro-batch shuffles.
@@ -114,14 +114,14 @@ object DocStream {
     * micro-batches, and a REPLAYED absorb would double the batch's
     * postings and corrupt later rescore counts — so each absorbed
     * batchId leaves a `_absorbed_<id>` marker under the index path and
-    * [[absorbOnce]] skips batches already marked. The pairs sink dedups
+    * the absorb skips batches already marked. The pairs sink dedups
     * on replay the usual way (downstream readers key on (id_a, id_b)).
     *
     * Caller contract (same as the batch path): streamed doc_ids disjoint
     * from indexed ids across the stream's lifetime.
     *
     * `compactAtFilesPerBucket`: with Some(n), each absorb is followed by
-    * [[Dedup.maybeCompactLshIndex]] — appends write one file per bucket
+    * [[IndexGen.maybeCompact]] — appends write one file per bucket
     * per micro-batch, so a streaming-cadence ingest otherwise grows the
     * probe scan's file count without bound (the r12 small-files gap).
     * Compaction re-points the catalog tables in place and later
@@ -137,9 +137,9 @@ object DocStream {
         val pairs = Dedup.probeLshIndex(cur, batch, "doc_id", "text",
           threshold)
         pairs.write.mode("append").parquet(outDir)
-        absorbOnce(cur, batch, batchId)
+        IndexGen.absorbOnce(cur, batch, "doc_id", "text", batchId)
         compactAtFilesPerBucket.foreach { n =>
-          cur = Dedup.maybeCompactLshIndex(spark, cur, n)
+          cur = IndexGen.maybeCompact(spark, cur, n)
         }
         graft.pipeline.Pins.flush() // micro-batch = this flow's boundary
       }
@@ -176,32 +176,6 @@ object DocStream {
       .start()
     q.awaitTermination()
     q
-  }
-
-  /** Idempotent absorb: append `batch` to the index unless this batchId
-    * already left its marker (a replayed micro-batch must not double the
-    * postings — duplicate posting rows inflate every later rescore's
-    * intersection counts). The append itself carries the batchId as a
-    * manifest tag ([[Dedup.appendToLshIndex]]'s `batchTag`), closing the
-    * crash window BETWEEN the append's last manifest commit and the
-    * marker write: the replay re-enters the append, finds its own tag
-    * already committed, and appends nothing — without the tag the
-    * fully-committed batch would land twice and corrupt every rescore
-    * count it touches until compaction. Returns true when the append
-    * ran (or was recognized as already committed). */
-  def absorbOnce(index: Dedup.LshIndex, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(index.path,
-      s"_absorbed_$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) false
-    else {
-      Dedup.appendToLshIndex(index, batch, "doc_id", "text",
-        batchTag = Some(s"absorb_$batchId"))
-      fs.create(marker, true).close()
-      true
-    }
   }
 
   /** Durable variant: flags land in a parquet sink with a checkpoint, so an

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.operators.Similarity
+import graft.operators.{IndexGen, Similarity}
 
 /** Streaming vector ingest over a PERSISTED IVF-PQ index — the ANN twin
   * of [[DocStream.ingestDedupStream]]: every micro-batch of new
@@ -13,7 +13,7 @@ import graft.operators.Similarity
   * neighbors (the duplicate/near-neighbor check a production embedding
   * ingest runs before admission), with the neighbor rows appended to a
   * parquet sink, then (2) ABSORBED into the index — encoded with the
-  * index's FROZEN model ([[Similarity.appendToAnnIndex]]) so codes stay
+  * index's FROZEN model ([[IndexGen.absorbOnce]]) so codes stay
   * decodable, and appended as bucketed files the next probe reads
   * exchange-free. The index side of every probe join arrives
   * bucket-partitioned from disk; only the micro-batch shuffles.
@@ -39,7 +39,7 @@ object VecStream {
 
   /** Full streaming ANN ingest loop: probe -> sink -> absorb per
     * micro-batch; with `compactAtFilesPerBucket = Some(n)`, each absorb
-    * is followed by [[Similarity.maybeCompactAnnIndex]] so a
+    * is followed by [[IndexGen.maybeCompact]] so a
     * streaming-cadence ingest bounds its own small-file growth (the
     * handle is tracked across batches — later appends land in the
     * compacted generation). */
@@ -54,9 +54,11 @@ object VecStream {
           col("embedding").cast("array<double>").as("qvec"))
         Similarity.probeAnnIndex(cur, qs, "qid", "qvec", k, nprobe)
           .write.mode("append").parquet(outDir)
-        absorbOnce(cur, batch, batchId)
+        IndexGen.absorbOnce(cur, batch.select(col("vec_id"),
+            col("embedding").cast("array<double>").as("vec")),
+          "vec_id", "vec", batchId)
         compactAtFilesPerBucket.foreach { n =>
-          cur = Similarity.maybeCompactAnnIndex(spark, cur, n)
+          cur = IndexGen.maybeCompact(spark, cur, n)
         }
       }
       .option("checkpointLocation", checkpointDir)
@@ -64,29 +66,5 @@ object VecStream {
       .start()
     q.awaitTermination()
     q
-  }
-
-  /** Idempotent absorb ([[DocStream.absorbOnce]] semantics): append the
-    * batch to the lists unless this batchId already left its marker.
-    * The append carries the batchId as a manifest tag, so a replay that
-    * crashed between the manifest commit and the marker write appends
-    * nothing the second time (a duplicated list row would give the same
-    * neighbor two top-k ranks until compaction). Returns true when the
-    * append ran (or was recognized as already committed). */
-  def absorbOnce(index: Similarity.AnnIndex, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(index.path,
-      s"_absorbed_$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) false
-    else {
-      Similarity.appendToAnnIndex(index,
-        batch.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("vec")),
-        "vec_id", "vec", batchTag = Some(s"absorb_$batchId"))
-      fs.create(marker, true).close()
-      true
-    }
   }
 }

@@ -1,273 +1,444 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Contam, Dedup, IndexGen, Similarity}
-import graft.pipeline.Pins
+import graft.IndexFixtures.{parquetFiles, tmp}
+import graft.operators.{Contam, Dedup, IndexGen}
 
-/** Crash-safety of BATCH appends across the persisted-index family (the
-  * r13 verdict's last gap): each table directory's `_manifest` names its
-  * committed files; a torn append — simulated here by re-installing the
-  * pre-append manifest after a REAL append, i.e. a crash anywhere before
-  * the manifest commit — must be repaired at the next open so probes
-  * answer as if the append never happened. Plus the single-writer lease:
-  * a second concurrent compaction raises instead of corrupting. */
+/** The persisted-index lifecycle and its crash protocol, run over every
+  * family in [[IndexFixtures.all]] (LSH, ANN, n-gram): torn-append
+  * repair, tagged exactly-once replay, the writer lease, append ==
+  * rebuild, retract == rebuild-without, compaction, the exchange-free
+  * probe, cross-session open, the compaction trigger, the BIGINT id
+  * contract and one file per bucket. A torn append is simulated by
+  * re-installing the pre-append manifests after a REAL append, i.e. a
+  * crash anywhere before the manifest commits. Family-specific crash
+  * cases (the LSH two-table commit window) and the lease protocol
+  * itself follow the loop. */
 class IndexCrashSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-  import spark.implicits._
 
-  private def tmp() =
-    java.nio.file.Files.createTempDirectory("idxcrash").toString
+  private def dirs(idx: IndexGen.Index[_]): Seq[String] =
+    idx.family.tables.map(t => idx.dir(t.base))
 
-  // manifest snapshot/restore through IndexGen (version-aware since the
-  // r15 `_manifest.N` scheme; goes through the Hadoop fs because the
-  // local fs keeps CRC sidecars — a raw java.nio write would fail the
-  // checksum on read)
-  private def readManifest(dir: String): (String, String) =
-    IndexGen.manifestSnapshot(spark, dir)
+  private def counts(idx: IndexGen.Index[_]): Seq[Long] =
+    idx.family.tables.map(t => spark.table(idx.table(t.base)).count())
 
-  private def writeManifest(dir: String, snap: (String, String)): Unit =
-    IndexGen.restoreManifest(spark, dir, snap)
-
-  // ------------------------------------------------------------------ LSH
-
-  private def corpus = (0L until 30L).map { i =>
-    (i, (0 until 12).map(k => s"w${(i * 7 + k * 3) % 50}").mkString(" "))
-  }.toDF("doc_id", "text")
-
-  private def variantBatch(shift: Long) = corpus
-    .filter(col("doc_id") % 4 === 0)
-    .select((col("doc_id") + shift).as("doc_id"),
-      regexp_replace(col("text"), "^\\S+\\s+", "").as("text"))
-
-  private def lshPairs(idx: Dedup.LshIndex, b: DataFrame) = {
-    val got = Dedup.probeLshIndex(idx, b, "doc_id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        math.rint(r.getDouble(2) * 1e6))).sorted.toSeq
-    Pins.flush()
-    got
+  private def withConf[T](k: String, v: String)(body: => T): T = {
+    val saved = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally saved.fold(spark.conf.unset(k))(spark.conf.set(k, _))
   }
 
-  test("LSH: a torn batch append is repaired — probes answer as before") {
-    val path = tmp()
-    val idx = Dedup.writeLshIndex(corpus, "doc_id", "text", path,
-      "crash_lsh", shingleSize = 3, numHashes = 64, bands = 16,
-      numBuckets = 4)
-    val batchA = variantBatch(1000)
-    val batchB = variantBatch(2000)
-    val basePairs = lshPairs(idx, batchB)
-    assert(basePairs.nonEmpty)
-    val mBands = readManifest(idx.bandsDir)
-    val mPosts = readManifest(idx.postsDir)
+  for (f <- IndexFixtures.all) {
+    val key = f.label.toLowerCase
+    def fresh(name: String): (String, IndexGen.Index[f.M]) = {
+      val path = tmp()
+      (path, f.write(f.corpus, path, s"${name}_$key"))
+    }
+    def rebuilt(like: IndexGen.Index[f.M], rows: org.apache.spark.sql.DataFrame) =
+      IndexGen.write(f.family, rows, f.idCol, f.srcCol, tmp(),
+        s"${like.name}_ref")(like.meta)
+    def add(idx: IndexGen.Index[f.M], shift: Long,
+        tag: Option[String] = None): Unit =
+      IndexGen.append(idx, f.batch(shift), f.idCol, f.srcCol, tag)
 
-    // torn append: the data files land but NEITHER manifest commits
-    Dedup.appendToLshIndex(idx, batchA, "doc_id", "text")
-    writeManifest(idx.bandsDir, mBands)
-    writeManifest(idx.postsDir, mPosts)
-    val reopened = Dedup.readLshIndex(spark, path, "crash_lsh")
-    assert(lshPairs(reopened, batchB) == basePairs,
-      "after repair the probe must not see any of batchA")
-    // and batchB finds no batchA partners at all
-    assert(!lshPairs(reopened, batchB).exists(p =>
-      p._1 >= 1000 && p._1 < 2000))
+    test(s"${f.label}: a torn batch append is repaired — probes answer as " +
+        "before") {
+      val (path, idx) = fresh("crash_torn")
+      val base = f.probe(idx)
+      val snaps = dirs(idx).map(d => d -> IndexGen.manifestSnapshot(spark, d))
+      val files = dirs(idx).map(parquetFiles(_).size)
+      add(idx, 1000)
+      assert(dirs(idx).map(parquetFiles(_).size) != files, "sanity")
+      // the data files landed but no manifest committed
+      snaps.foreach { case (d, m) => IndexGen.restoreManifest(spark, d, m) }
+      val reopened = IndexGen.open(spark, f.family, path, idx.name)
+      assert(f.probe(reopened) == base,
+        "after repair the probe must not see any of the torn append")
+    }
+
+    test(s"${f.label}: a TAGGED replay of a fully-committed append is " +
+        "exactly-once (the commit-to-marker crash window)") {
+      // the streaming absorb writes its _absorbed_ marker AFTER the
+      // append; a crash in between replays a batch whose manifests
+      // already committed. Untagged, the batch lands twice — duplicated
+      // LSH postings double one side of every jaccard rescore count, a
+      // duplicated ANN list row holds two top-k ranks. The tag commits
+      // atomically with each manifest, so the replay appends nothing.
+      val (path, idx) = fresh("crash_tag")
+      val base = f.probe(idx)
+      add(idx, 1000, Some("absorb_0")) // absorbOnce's tag for batchId 0
+      val rows1 = counts(idx)
+      val probe1 = f.probe(idx)
+      assert(probe1 != base)
+      val marker = new java.io.File(path, "_absorbed_0")
+      assert(!marker.exists)
+      assert(IndexGen.absorbOnce(idx, f.batch(1000), f.idCol, f.srcCol, 0L),
+        "the replay runs the (no-op) append and writes the marker")
+      assert(marker.exists)
+      assert(counts(idx) == rows1, "the replay must not re-append any table")
+      assert(f.probe(idx) == probe1)
+      assert(!IndexGen.absorbOnce(idx, f.batch(1000), f.idCol, f.srcCol, 0L),
+        "the marker short-circuits the next replay")
+      // a DIFFERENT tag is a new batch and does append
+      add(idx, 3000, Some("absorb_1"))
+      assert(counts(idx).zip(rows1).forall { case (n, n1) => n > n1 })
+    }
+
+    test(s"${f.label}: append and retract take the writer lease") {
+      // commitManifest snapshots the directory's CURRENT file set, so two
+      // concurrent appends would have each other's half-written files
+      // legitimized; a tombstone appended between a compaction's
+      // tombstones read and its clear would be silently dropped. A live
+      // lease makes both raise with nothing written.
+      val (path, idx) = fresh("crash_lease")
+      val base = f.probe(idx)
+      val lock = new java.io.File(path, "_writer_lock")
+      assert(lock.createNewFile(), "simulated concurrent writer")
+      val ids = f.batch(1000).select(col(f.idCol))
+      for (e <- Seq(
+          intercept[IllegalStateException](add(idx, 1000)),
+          intercept[IllegalStateException](
+            IndexGen.retract(idx, ids, f.idCol))))
+        assert(e.getMessage.contains("single-writer"))
+      assert(!new java.io.File(path, "tombstones").exists)
+      assert(f.probe(IndexGen.open(spark, f.family, path, idx.name)) == base,
+        "the locked-out writers must have written nothing")
+      assert(lock.delete())
+      add(idx, 1000)
+      assert(!lock.exists, "the append lease is released")
+      assert(f.probe(idx) != base)
+      IndexGen.retract(idx, ids, f.idCol)
+      assert(!lock.exists, "the retract lease is released")
+      assert(f.probe(idx) == base, "retracting the appended ids hides them")
+    }
+
+    test(s"${f.label}: append == index rebuilt from scratch with the same " +
+        "meta") {
+      val (_, idx) = fresh("app")
+      val base = f.probe(idx)
+      add(idx, 1000)
+      val got = f.probe(idx)
+      // the same meta: an ANN reference encodes with the model trained on
+      // the ORIGINAL corpus (the persisted model is frozen at write time)
+      assert(got == f.probe(rebuilt(idx, f.corpus.unionByName(f.batch(1000)))))
+      assert(got != base, "the appended batch must reach the probe")
+    }
+
+    test(s"${f.label}: retraction == index rebuilt without the retracted " +
+        "ids; compaction keeps it") {
+      val (path, idx) = fresh("rtr")
+      val base = f.probe(idx)
+      val gone = f.corpus.filter(col(f.idCol) % 3 === 0)
+      IndexGen.retract(idx, gone.select(col(f.idCol)), f.idCol)
+      val got = f.probe(idx)
+      assert(got == f.probe(rebuilt(idx,
+        f.corpus.filter(col(f.idCol) % 3 =!= 0))))
+      assert(got != base, "the retraction must reach the probe")
+      // compaction applies the tombstones physically and clears them
+      val compacted = IndexGen.compact(spark, idx)
+      assert(!new java.io.File(path, "tombstones").exists)
+      assert(f.probe(compacted) == got)
+      // a retracted id can be re-added AFTER compaction
+      IndexGen.append(compacted, gone, f.idCol, f.srcCol)
+      assert(f.probe(compacted) == base)
+    }
+
+    test(s"${f.label}: compaction packs one file per bucket; the compacted " +
+        "generation reopens and takes appends") {
+      val (path, idx) = fresh("cpt")
+      add(idx, 1000)
+      add(idx, 3000)
+      val before = f.probe(idx)
+      assert(dirs(idx).exists(IndexGen.maxFilesPerBucket(spark, _) > 1),
+        "two appends must leave several files in some bucket")
+      val compacted = IndexGen.compact(spark, idx)
+      assert(compacted.gen == 1)
+      for (d <- dirs(compacted)) {
+        assert(d.endsWith(".c1") && parquetFiles(d).size <= 4)
+        assert(IndexGen.maxFilesPerBucket(spark, d) == 1, d)
+      }
+      dirs(idx).foreach(d => assert(parquetFiles(d).isEmpty,
+        s"generation 0 must be retention-swept: $d"))
+      assert(f.probe(compacted) == before)
+      // a later session resolves the committed generation from its marker
+      f.family.tables.foreach(t =>
+        spark.sql(s"DROP TABLE ${compacted.table(t.base)}"))
+      val reopened = IndexGen.open(spark, f.family, path, idx.name)
+      assert(reopened.gen == 1 && f.probe(reopened) == before)
+      val rows = counts(reopened)
+      add(reopened, 5000)
+      assert(counts(reopened).zip(rows).forall { case (n, n0) => n > n0 },
+        "appends land in the compacted generation")
+    }
+
+    test(s"${f.label}: the probe's index side is a bucketed scan with NO " +
+        "exchange (after write, append, retract and compaction)") {
+      val (_, idx) = fresh("plan")
+      def check(i: IndexGen.Index[f.M], state: String): Unit = {
+        val scans = IndexFixtures.indexScans(f.probeFrame(i),
+          i.table(f.probeTable))
+        assert(scans.nonEmpty && scans.forall(_ == ((true, 0))),
+          s"$state: (bucketed, exchanges) per index scan = $scans")
+      }
+      check(idx, "fresh write")
+      add(idx, 1000)
+      check(idx, "after append")
+      // tombstones filter through a BROADCAST anti-join, which keeps the
+      // bucketed partitioning
+      IndexGen.retract(idx, f.batch(1000).select(col(f.idCol)), f.idCol)
+      check(idx, "with tombstones")
+      check(IndexGen.compact(spark, idx), "after compaction")
+    }
+
+    test(s"${f.label}: open re-registers the tables from meta.json under a " +
+        "file: URI (cross-session)") {
+      // meta.json resolves its FileSystem through the session conf, like
+      // the table writers: a default `new Configuration()` would drop a
+      // Spark-conf-only fs.defaultFS and write it elsewhere
+      val path = "file:" + tmp()
+      val written = f.write(f.corpus, path, s"uri_$key")
+      val want = f.probe(written)
+      // a later session: the catalog entries are gone, only files remain
+      f.family.tables.foreach(t =>
+        spark.sql(s"DROP TABLE ${written.table(t.base)}"))
+      val idx = IndexGen.open(spark, f.family, path, written.name)
+      assert(idx.meta == written.meta && idx.gen == 0)
+      assert(want.nonEmpty && f.probe(idx) == want)
+    }
+
+    test(s"${f.label}: maybeCompact triggers only past the files-per-bucket " +
+        "bar") {
+      val (_, idx) = fresh("mcpt")
+      assert(IndexGen.maybeCompact(spark, idx, 1) eq idx,
+        "a fresh write is already packed")
+      add(idx, 1000)
+      val appended = f.probe(idx)
+      assert(IndexGen.maybeCompact(spark, idx, 2) eq idx)
+      val compacted = IndexGen.maybeCompact(spark, idx, 1)
+      assert(compacted.gen == 1 && f.probe(compacted) == appended)
+    }
+
+    test(s"${f.label}: write, append and retract refuse non-BIGINT ids") {
+      val bad = f.corpus.withColumn(f.idCol, col(f.idCol).cast("int"))
+      val (_, idx) = fresh("bad")
+      for (e <- Seq(
+          intercept[IllegalArgumentException](f.write(bad, tmp(), "bad")),
+          intercept[IllegalArgumentException](
+            IndexGen.append(idx, bad, f.idCol, f.srcCol)),
+          intercept[IllegalArgumentException](
+            IndexGen.retract(idx, bad.select(col(f.idCol)), f.idCol))))
+        assert(e.getMessage.contains("BIGINT"))
+    }
+
+    test(s"${f.label}: a fresh write and each append leave at most one file " +
+        "per bucket") {
+      // without partition coalescing every post-shuffle task holds rows of
+      // every bucket: only the bucket-hash repartition keeps it to one file
+      withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+        val (_, idx) = fresh("fpb")
+        def worst = dirs(idx).map(IndexGen.maxFilesPerBucket(spark, _)).max
+        assert(worst == 1)
+        for (n <- 1 to 2) {
+          add(idx, 1000L * (2 * n - 1))
+          assert(worst <= n + 1, s"append $n")
+        }
+      }
+    }
   }
+
+  // ------------------------------------------------ LSH: two-table commits
+
+  private val lsh = IndexFixtures.Lsh
+
+  private def seesBatch(pairs: Seq[Seq[Any]], lo: Long): Boolean =
+    pairs.exists(p => p.head.asInstanceOf[Long] >= lo &&
+      p.head.asInstanceOf[Long] < lo + 1000)
+
+  private def lshIndex(path: String, name: String): Dedup.LshIndex =
+    lsh.write(lsh.corpus, path, name)
 
   test("LSH: bands-committed/posts-torn leaves probes unchanged; a retry " +
       "append lands the batch exactly once") {
     val path = tmp()
-    val idx = Dedup.writeLshIndex(corpus, "doc_id", "text", path,
-      "crash_lsh2", shingleSize = 3, numHashes = 64, bands = 16,
-      numBuckets = 4)
-    val batchA = variantBatch(1000)
-    val batchB = variantBatch(2000)
-    val basePairs = lshPairs(idx, batchB)
-    val mPosts = readManifest(idx.postsDir)
-
+    val idx = lshIndex(path, "crash_lsh2")
+    val basePairs = lsh.probe(idx)
+    val mPosts = IndexGen.manifestSnapshot(spark, idx.dir("posts"))
     // crash BETWEEN the two manifest commits: bands committed (ghost
     // rows), posts torn — the documented benign asymmetry
-    Dedup.appendToLshIndex(idx, batchA, "doc_id", "text")
-    writeManifest(idx.postsDir, mPosts)
-    val reopened = Dedup.readLshIndex(spark, path, "crash_lsh2")
-    assert(lshPairs(reopened, batchB) == basePairs,
+    IndexGen.append(idx, lsh.batch(1000), "doc_id", "text")
+    IndexGen.restoreManifest(spark, idx.dir("posts"), mPosts)
+    val reopened = IndexGen.open(spark, Dedup.Lsh, path, "crash_lsh2")
+    assert(lsh.probe(reopened) == basePairs,
       "ghost bands rows must not change the rescored pair set")
-
-    // the retry (streaming replay path): batchA must land exactly once —
-    // probe equals a scratch-built index with the same one append
-    Dedup.appendToLshIndex(reopened, batchA, "doc_id", "text")
-    val got = lshPairs(reopened, batchB)
-    val refPath = tmp()
-    val ref = Dedup.writeLshIndex(corpus, "doc_id", "text", refPath,
-      "crash_lsh2_ref", shingleSize = 3, numHashes = 64, bands = 16,
-      numBuckets = 4)
-    Dedup.appendToLshIndex(ref, batchA, "doc_id", "text")
-    assert(got == lshPairs(ref, batchB))
-    assert(got.exists(p => p._1 >= 1000 && p._1 < 2000),
+    // the retry (streaming replay path): the batch must land exactly
+    // once — probe equals a scratch-built index with the same one append
+    IndexGen.append(reopened, lsh.batch(1000), "doc_id", "text")
+    val got = lsh.probe(reopened)
+    val ref = lshIndex(tmp(), "crash_lsh2_ref")
+    IndexGen.append(ref, lsh.batch(1000), "doc_id", "text")
+    assert(got == lsh.probe(ref))
+    assert(seesBatch(got, 1000),
       "the retried append must be visible (batchA partners batchB)")
   }
 
-  // ------------------------------------------------------------------ ANN
-
-  private val Dim = 16
-
-  private lazy val vecs: DataFrame = spark.range(0, 120).toDF("vec_id")
-    .select(col("vec_id"),
-      transform(sequence(lit(0), lit(Dim - 1)),
-        i => sin(col("vec_id") * 0.37 + i * 1.13)
-          + cos(col("vec_id") % 5 * 2.1 - i * 0.5)).as("vec"))
-
-  private def annTopk(idx: Similarity.AnnIndex) = {
-    val q = vecs.filter(col("vec_id") % 30 === 0)
-      .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-    val got = Similarity.probeAnnIndex(idx, q, "qid", "qvec", k = 5,
-        nprobe = 3)
-      .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
-        r.getAs[Long]("neighbor_id"))).sorted.toSeq
-    Pins.flush()
-    got
-  }
-
-  test("ANN: a torn batch append is repaired — probes answer as before") {
+  test("LSH: a TAGGED retry of a bands-committed/posts-torn crash lands " +
+      "the batch exactly once — no ghost band rows at all") {
     val path = tmp()
-    val idx = Similarity.writeAnnIndex(vecs, "vec_id", "vec", path,
-      "crash_ann", m = 4, k = 8, nlist = 8, numBuckets = 4)
-    val base = annTopk(idx)
-    assert(base.nonEmpty)
-    val m0 = readManifest(idx.listsDir)
-    val batch = vecs.filter(col("vec_id") < 20)
-      .select((col("vec_id") + 500).as("vec_id"), col("vec"))
-    Similarity.appendToAnnIndex(idx, batch, "vec_id", "vec")
-    writeManifest(idx.listsDir, m0)
-    val reopened = Similarity.readAnnIndex(spark, path, "crash_ann")
-    assert(annTopk(reopened) == base,
-      "after repair no appended vector may appear in any top-k")
+    val idx = lshIndex(path, "crash_tag2")
+    val mPosts = IndexGen.manifestSnapshot(spark, idx.dir("posts"))
+    IndexGen.append(idx, lsh.batch(1000), "doc_id", "text",
+      batchTag = Some("absorb_3"))
+    // crash between the two commits
+    IndexGen.restoreManifest(spark, idx.dir("posts"), mPosts)
+    val reopened = IndexGen.open(spark, Dedup.Lsh, path, "crash_tag2")
+    IndexGen.append(reopened, lsh.batch(1000), "doc_id", "text",
+      batchTag = Some("absorb_3")) // the replay
+    // equal to a scratch build + ONE clean append — bands included
+    // (the untagged path duplicates them until compaction)
+    val ref = lshIndex(tmp(), "crash_tag2_ref")
+    IndexGen.append(ref, lsh.batch(1000), "doc_id", "text")
+    val bands = spark.table(reopened.table("bands"))
+    assert(bands.count() == spark.table(ref.table("bands")).count(),
+      "the tagged retry must skip the committed bands directory")
+    assert(bands.count() == bands.distinct().count(), "no duplicates")
+    assert(lsh.probe(reopened) == lsh.probe(ref))
   }
 
-  // ---------------------------------------------------------------- ngram
-
-  private def bench = (0L until 6L).map { i =>
-    (i, (0 until 8).map(k => s"b${(i * 5 + k) % 40}").mkString(" "))
-  }.toDF("doc_id", "text")
-
-  private def probeBatch = (0L until 8L).map { i =>
-    (i + 1000L, (0 until 8).map(k => s"b${(i * 5 + k) % 40}").mkString(" "))
-  }.toDF("doc_id", "text")
-
-  private def contamMap(idx: Contam.NgramIndex) = {
-    val got = Contam.probeNgramIndex(idx, probeBatch, "doc_id", "text")
-      .collect().map(r => (r.getLong(0),
-        (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    Pins.flush()
-    got
-  }
-
-  test("ngram: a torn batch append is repaired — probes answer as before") {
+  test("LSH: compaction dedupes the retried append's ghost band rows") {
+    // bands-committed/posts-torn crash + an UNTAGGED retry: the retried
+    // bands land a second time; probes stay correct but the duplication
+    // must not survive compaction
     val path = tmp()
-    val idx = Contam.writeNgramIndex(bench, "doc_id", "text", path,
-      "crash_ng", n = 4, numBuckets = 4)
-    val base = contamMap(idx)
-    val m0 = readManifest(idx.gramsDir)
-    val extra = bench.select((col("doc_id") + 100).as("doc_id"),
-      concat(col("text"), lit(" zz zz zz")).as("text"))
-    Contam.appendToNgramIndex(idx, extra, "doc_id", "text")
-    writeManifest(idx.gramsDir, m0)
-    val reopened = Contam.readNgramIndex(spark, path, "crash_ng")
-    assert(contamMap(reopened) == base,
-      "after repair the appended benchmark docs must be invisible")
+    val idx = lshIndex(path, "crash_bdup")
+    val mPosts = IndexGen.manifestSnapshot(spark, idx.dir("posts"))
+    IndexGen.append(idx, lsh.batch(1000), "doc_id", "text")
+    IndexGen.restoreManifest(spark, idx.dir("posts"), mPosts)
+    val reopened = IndexGen.open(spark, Dedup.Lsh, path, "crash_bdup")
+    IndexGen.append(reopened, lsh.batch(1000), "doc_id", "text") // retry
+    val bands = spark.table(reopened.table("bands"))
+    assert(bands.count() > bands.distinct().count(),
+      "the retry duplicates the batch's committed band rows (the honest " +
+        "pre-compaction state)")
+    val compacted = IndexGen.compact(spark, reopened)
+    val b2 = spark.table(compacted.table("bands"))
+    assert(b2.count() == b2.distinct().count(),
+      "compaction must fold the duplicated band rows")
+    // and the compacted index equals a scratch build + one clean append
+    val ref = lshIndex(tmp(), "crash_bdup_ref")
+    IndexGen.append(ref, lsh.batch(1000), "doc_id", "text")
+    assert(b2.count() == spark.table(ref.table("bands")).count())
+    assert(lsh.probe(compacted) == lsh.probe(ref))
   }
+
+  // ------------------------------------------------ n-gram: single table
+
+  private val ngram = IndexFixtures.Ngram
 
   test("ngram: dropping ONE bucket file of a torn append still repairs") {
-    // the verdict's literal scenario: a crash that leaves only SOME of
-    // the append's files — delete one new file, keep the rest, no
-    // manifest commit; repair removes the remainder too
+    // a crash that leaves only SOME of the append's files — delete one
+    // new file, keep the rest, no manifest commit; repair removes the
+    // remainder too
     val path = tmp()
-    val idx = Contam.writeNgramIndex(bench, "doc_id", "text", path,
-      "crash_ng2", n = 4, numBuckets = 4)
-    val base = contamMap(idx)
-    val m0 = readManifest(idx.gramsDir)
-    val before = new java.io.File(idx.gramsDir.stripPrefix("file:"))
-      .listFiles.map(_.getName).filter(_.endsWith(".parquet")).toSet
-    Contam.appendToNgramIndex(idx,
-      bench.select((col("doc_id") + 100).as("doc_id"), col("text")),
-      "doc_id", "text")
-    writeManifest(idx.gramsDir, m0)
-    val dir = new java.io.File(idx.gramsDir.stripPrefix("file:"))
-    val fresh = dir.listFiles.map(_.getName)
-      .filter(n => n.endsWith(".parquet") && !before(n))
+    val idx = ngram.write(ngram.corpus, path, "crash_ng2")
+    val base = ngram.probe(idx)
+    val m0 = IndexGen.manifestSnapshot(spark, idx.dir("grams"))
+    val before = parquetFiles(idx.dir("grams")).toSet
+    IndexGen.append(idx, ngram.batch(100), "doc_id", "text")
+    IndexGen.restoreManifest(spark, idx.dir("grams"), m0)
+    val dir = new java.io.File(idx.dir("grams"))
+    val fresh = parquetFiles(idx.dir("grams")).filterNot(before)
     assert(fresh.nonEmpty)
     assert(new java.io.File(dir, fresh.head).delete())
-    val reopened = Contam.readNgramIndex(spark, path, "crash_ng2")
-    assert(contamMap(reopened) == base)
+    val reopened = IndexGen.open(spark, Contam.Ngram, path, "crash_ng2")
+    assert(ngram.probe(reopened) == base)
     // repair removed every other torn file as well
-    val after = dir.listFiles.map(_.getName)
-      .filter(_.endsWith(".parquet")).toSet
-    assert(after == before)
+    assert(parquetFiles(idx.dir("grams")).toSet == before)
+  }
+
+  test("absorbOnce closes the commit-to-marker window end-to-end") {
+    // the exact crash: the append committed (tagged) but the process died
+    // before the _absorbed_ marker landed; the streaming replay re-enters
+    // absorbOnce, which must recognize the committed tag, append nothing
+    // to EITHER table of the two-table family, and write the marker
+    val path = tmp()
+    val idx = lshIndex(path, "crash_absorb")
+    val batchA = lsh.batch(1000)
+    IndexGen.append(idx, batchA, "doc_id", "text",
+      batchTag = Some("absorb_0")) // absorbOnce's tag for batchId 0
+    val bands1 = spark.table(idx.table("bands")).count()
+    val posts1 = spark.table(idx.table("posts")).count()
+    assert(!new java.io.File(path, "_absorbed_0").exists)
+    assert(IndexGen.absorbOnce(idx, batchA, "doc_id", "text", 0L),
+      "the replay runs the (no-op) append and writes the marker")
+    assert(new java.io.File(path, "_absorbed_0").exists)
+    assert(spark.table(idx.table("bands")).count() == bands1 &&
+      spark.table(idx.table("posts")).count() == posts1,
+      "the replayed absorb must not re-append the committed batch")
+    // and the NEXT replay short-circuits on the marker
+    assert(!IndexGen.absorbOnce(idx, batchA, "doc_id", "text", 0L))
   }
 
   // ----------------------------------------------------------- writer lock
 
   test("a second concurrent compaction raises; stale leases expire") {
     val path = tmp()
-    val idx = Contam.writeNgramIndex(bench, "doc_id", "text", path,
-      "crash_lock", n = 4, numBuckets = 4)
+    val idx = ngram.write(ngram.corpus, path, "crash_lock")
     val lock = new java.io.File(path, "_writer_lock")
     assert(lock.createNewFile(), "simulated concurrent writer")
     val e = intercept[IllegalStateException] {
-      Contam.compactNgramIndex(spark, idx)
+      IndexGen.compact(spark, idx)
     }
     assert(e.getMessage.contains("single-writer"))
     // a crashed holder's lease expires by age and is broken
     assert(lock.setLastModified(
       System.currentTimeMillis() - 2L * 60 * 60 * 1000))
-    val c1 = Contam.compactNgramIndex(spark, idx)
+    val c1 = IndexGen.compact(spark, idx)
     assert(c1.gen > idx.gen)
     assert(!lock.exists, "the lease is released after the rewrite")
     // and the lease is reusable: a later compaction acquires it again
-    val c2 = Contam.compactNgramIndex(spark, c1)
+    val c2 = IndexGen.compact(spark, c1)
     assert(c2.gen > c1.gen)
-    assert(contamMap(c2) == contamMap(idx))
-  }
-
-  test("a second concurrent APPEND raises instead of cross-committing") {
-    // commitManifest snapshots the directory's CURRENT file set, so two
-    // concurrent appends would have each other's half-written files
-    // legitimized by whichever commit lands last — since r15 every batch
-    // append holds the writer lease and the second one fails loudly
-    val path = tmp()
-    val idx = Dedup.writeLshIndex(corpus, "doc_id", "text", path,
-      "crash_applock", shingleSize = 3, numHashes = 64, bands = 16,
-      numBuckets = 4)
-    val lock = new java.io.File(path, "_writer_lock")
-    assert(lock.createNewFile(), "simulated concurrent writer")
-    val e = intercept[IllegalStateException] {
-      Dedup.appendToLshIndex(idx, variantBatch(1000), "doc_id", "text")
-    }
-    assert(e.getMessage.contains("single-writer"))
-    // no partial state: the locked-out append wrote nothing
-    val reopened = Dedup.readLshIndex(spark, path, "crash_applock")
-    assert(!lshPairs(reopened, variantBatch(2000)).exists(p =>
-      p._1 >= 1000 && p._1 < 2000))
-    // released lock: the append goes through and is visible
-    assert(lock.delete())
-    Dedup.appendToLshIndex(reopened, variantBatch(1000), "doc_id", "text")
-    assert(!lock.exists, "the append lease is released")
-    assert(lshPairs(reopened, variantBatch(2000)).exists(p =>
-      p._1 >= 1000 && p._1 < 2000))
+    assert(ngram.probe(c2) == ngram.probe(idx))
   }
 
   test("ngram: the same append lease guards the single-table family") {
     val path = tmp()
-    val idx = Contam.writeNgramIndex(bench, "doc_id", "text", path,
-      "crash_applock2", n = 4, numBuckets = 4)
+    val idx = ngram.write(ngram.corpus, path, "crash_applock2")
+    val base = ngram.probe(idx)
     val lock = new java.io.File(path, "_writer_lock")
     assert(lock.createNewFile())
     intercept[IllegalStateException] {
-      Contam.appendToNgramIndex(idx,
-        bench.select((col("doc_id") + 100).as("doc_id"), col("text")),
-        "doc_id", "text")
+      IndexGen.append(idx, ngram.batch(100), "doc_id", "text")
     }
     assert(lock.delete())
+    assert(ngram.probe(IndexGen.open(spark, Contam.Ngram, path,
+      "crash_applock2")) == base, "the locked-out append wrote nothing")
+  }
+
+  test("retract holds the lease: a tombstone cannot race a compaction") {
+    // the lost-update race: a tombstone appended between a compaction's
+    // tombstones read and its tombstones clear is cleared WITHOUT being
+    // folded into the files — the retracted ids resurface. A concurrent
+    // writer makes the retract raise with nothing written.
+    val path = tmp()
+    val idx = ngram.write(ngram.corpus, path, "crash_retract")
+    val lock = new java.io.File(path, "_writer_lock")
+    assert(lock.createNewFile(), "simulated concurrent compaction")
+    intercept[IllegalStateException] {
+      IndexGen.retract(idx, ngram.corpus.select(col("doc_id")), "doc_id")
+    }
+    assert(!new java.io.File(path, "tombstones").exists,
+      "the locked-out retract must not have appended tombstones")
+    assert(lock.delete())
+    // and with the lease free the retract lands and probes hide the ids
+    IndexGen.retract(idx, ngram.corpus.select(col("doc_id")), "doc_id")
+    assert(!lock.exists, "the retract lease is released")
+    val got = ngram.probe(idx)
+    assert(got.nonEmpty && got.forall(r => r(2) == 0L && r(3) == 0L),
+      s"tombstoned benchmark docs must stop contaminating probes: $got")
   }
 
   // ----------------------------------------------------- manifest versions
@@ -283,79 +454,41 @@ class IndexCrashSpec extends AnyFunSuite {
     // The versioned commit never deletes on the read path: a fresh name
     // is renamed in first, superseded versions swept after.
     val path = tmp()
-    val idx = Contam.writeNgramIndex(bench, "doc_id", "text", path,
-      "crash_mver", n = 4, numBuckets = 4)
-    assert(manifestNames(idx.gramsDir).size == 1,
+    val idx = ngram.write(ngram.corpus, path, "crash_mver")
+    val grams = idx.dir("grams")
+    assert(manifestNames(grams).size == 1,
       "exactly one committed version after the initial write")
-    Contam.appendToNgramIndex(idx,
-      bench.select((col("doc_id") + 100).as("doc_id"), col("text")),
-      "doc_id", "text")
-    assert(manifestNames(idx.gramsDir).size == 1,
+    IndexGen.append(idx, ngram.batch(100), "doc_id", "text")
+    assert(manifestNames(grams).size == 1,
       "the commit sweeps superseded versions after the rename")
-    val appended = contamMap(Contam.readNgramIndex(spark, path,
+    val appended = ngram.probe(IndexGen.open(spark, Contam.Ngram, path,
       "crash_mver"))
 
     // crash between the tmp write and the rename of a LATER commit:
     // stray _manifest.tmp + a torn data file; the surviving committed
     // version still drives repair
-    val dir = new java.io.File(idx.gramsDir.stripPrefix("file:"))
+    val dir = new java.io.File(grams)
     val fw = new java.io.FileWriter(new java.io.File(dir, "_manifest.tmp"))
     try fw.write("part-torn.parquet") finally fw.close()
     val torn = new java.io.FileWriter(
       new java.io.File(dir, "part-torn.parquet"))
     try torn.write("not parquet") finally torn.close()
-    val reopened = Contam.readNgramIndex(spark, path, "crash_mver")
+    val reopened = IndexGen.open(spark, Contam.Ngram, path, "crash_mver")
     assert(!new java.io.File(dir, "part-torn.parquet").exists,
       "repair must use the surviving committed version")
-    assert(contamMap(reopened) == appended)
+    assert(ngram.probe(reopened) == appended)
 
     // legacy fixed-name `_manifest` (a pre-versioning index) still reads
     // as version 0, and the next commit migrates it to a versioned name
-    val cur = manifestNames(idx.gramsDir)
-      .filter(_.matches("_manifest\\.\\d+"))
-    assert(cur.nonEmpty)
-    val legacySnap = IndexGen.manifestSnapshot(spark, idx.gramsDir)
-    IndexGen.restoreManifest(spark, idx.gramsDir,
-      ("_manifest", legacySnap._2))
-    assert(contamMap(Contam.readNgramIndex(spark, path, "crash_mver"))
+    assert(manifestNames(grams).exists(_.matches("_manifest\\.\\d+")))
+    val legacySnap = IndexGen.manifestSnapshot(spark, grams)
+    IndexGen.restoreManifest(spark, grams, ("_manifest", legacySnap._2))
+    assert(ngram.probe(IndexGen.open(spark, Contam.Ngram, path, "crash_mver"))
       == appended, "legacy manifests must keep driving repair")
-    IndexGen.commitManifest(spark, idx.gramsDir)
-    val after = manifestNames(idx.gramsDir)
+    IndexGen.commitManifest(spark, grams)
+    val after = manifestNames(grams)
     assert(after.size == 1 && after.head.matches("_manifest\\.\\d+"),
       s"the next commit must migrate off the legacy name, got $after")
-  }
-
-  test("LSH: compaction dedupes the retried append's ghost band rows") {
-    // bands-committed/posts-torn crash + retry: the retried BANDS land a
-    // second time (documented in appendToLshIndex); probes stay correct
-    // but the duplication must not survive compaction
-    val path = tmp()
-    val idx = Dedup.writeLshIndex(corpus, "doc_id", "text", path,
-      "crash_bdup", shingleSize = 3, numHashes = 64, bands = 16,
-      numBuckets = 4)
-    val batchA = variantBatch(1000)
-    val batchB = variantBatch(2000)
-    val mPosts = readManifest(idx.postsDir)
-    Dedup.appendToLshIndex(idx, batchA, "doc_id", "text")
-    writeManifest(idx.postsDir, mPosts) // crash between the two commits
-    val reopened = Dedup.readLshIndex(spark, path, "crash_bdup")
-    Dedup.appendToLshIndex(reopened, batchA, "doc_id", "text") // retry
-    val bands = spark.table(reopened.bandsTable)
-    assert(bands.count() > bands.distinct().count(),
-      "the retry duplicates the batch's committed band rows (the honest " +
-        "pre-compaction state)")
-    val compacted = Dedup.compactLshIndex(spark, reopened)
-    val b2 = spark.table(compacted.bandsTable)
-    assert(b2.count() == b2.distinct().count(),
-      "compaction must fold the duplicated band rows")
-    // and the compacted index equals a scratch build + one clean append
-    val refPath = tmp()
-    val ref = Dedup.writeLshIndex(corpus, "doc_id", "text", refPath,
-      "crash_bdup_ref", shingleSize = 3, numHashes = 64, bands = 16,
-      numBuckets = 4)
-    Dedup.appendToLshIndex(ref, batchA, "doc_id", "text")
-    assert(b2.count() == spark.table(ref.bandsTable).count())
-    assert(lshPairs(compacted, batchB) == lshPairs(ref, batchB))
   }
 
   // ------------------------------------------------------ stale-lock break
@@ -484,171 +617,5 @@ class IndexCrashSpec extends AnyFunSuite {
           s"got: ${e.getMessage}")
     }
     assert(lockToken(dir).isEmpty, "released after the body")
-  }
-
-  // ---------------------------------------------------- tagged exactly-once
-
-  test("LSH: a TAGGED replay of a fully-committed append is exactly-once " +
-      "(the commit-to-marker crash window)") {
-    // the streaming absorb writes its _absorbed_ marker AFTER the append;
-    // a crash in between replays a batch whose manifests already
-    // committed. Untagged, the whole batch lands twice — and duplicated
-    // POSTINGS are not benign: jaccardRescore counts rows, so every pair
-    // touching the batch doubles one side of its intersection/size
-    // counts. The batch tag commits atomically with each manifest and
-    // the replay appends nothing.
-    val path = tmp()
-    val idx = Dedup.writeLshIndex(corpus, "doc_id", "text", path,
-      "crash_tag", shingleSize = 3, numHashes = 64, bands = 16,
-      numBuckets = 4)
-    val batchA = variantBatch(1000)
-    val batchB = variantBatch(2000)
-    Dedup.appendToLshIndex(idx, batchA, "doc_id", "text",
-      batchTag = Some("absorb_7"))
-    val bands1 = spark.table(idx.bandsTable).count()
-    val posts1 = spark.table(idx.postsTable).count()
-    val pairs1 = lshPairs(idx, batchB)
-    assert(pairs1.exists(p => p._1 >= 1000 && p._1 < 2000))
-    // the replay: same batch, same tag — nothing may land
-    Dedup.appendToLshIndex(idx, batchA, "doc_id", "text",
-      batchTag = Some("absorb_7"))
-    assert(spark.table(idx.bandsTable).count() == bands1,
-      "replayed tagged append must not duplicate band rows")
-    assert(spark.table(idx.postsTable).count() == posts1,
-      "replayed tagged append must not duplicate posting rows")
-    assert(lshPairs(idx, batchB) == pairs1,
-      "probe results (jaccard values included) must be unchanged")
-    // a DIFFERENT tag is a new batch and does append
-    Dedup.appendToLshIndex(idx, variantBatch(3000), "doc_id", "text",
-      batchTag = Some("absorb_8"))
-    assert(spark.table(idx.postsTable).count() > posts1)
-  }
-
-  test("LSH: a TAGGED retry of a bands-committed/posts-torn crash lands " +
-      "the batch exactly once — no ghost band rows at all") {
-    val path = tmp()
-    val idx = Dedup.writeLshIndex(corpus, "doc_id", "text", path,
-      "crash_tag2", shingleSize = 3, numHashes = 64, bands = 16,
-      numBuckets = 4)
-    val batchA = variantBatch(1000)
-    val batchB = variantBatch(2000)
-    val mPosts = readManifest(idx.postsDir)
-    Dedup.appendToLshIndex(idx, batchA, "doc_id", "text",
-      batchTag = Some("absorb_3"))
-    writeManifest(idx.postsDir, mPosts) // crash between the two commits
-    val reopened = Dedup.readLshIndex(spark, path, "crash_tag2")
-    Dedup.appendToLshIndex(reopened, batchA, "doc_id", "text",
-      batchTag = Some("absorb_3")) // the replay
-    // equal to a scratch build + ONE clean append — bands included
-    // (the untagged path duplicates them until compaction)
-    val refPath = tmp()
-    val ref = Dedup.writeLshIndex(corpus, "doc_id", "text", refPath,
-      "crash_tag2_ref", shingleSize = 3, numHashes = 64, bands = 16,
-      numBuckets = 4)
-    Dedup.appendToLshIndex(ref, batchA, "doc_id", "text")
-    val bands = spark.table(reopened.bandsTable)
-    assert(bands.count() == spark.table(ref.bandsTable).count(),
-      "the tagged retry must skip the committed bands directory")
-    assert(bands.count() == bands.distinct().count(), "no duplicates")
-    assert(lshPairs(reopened, batchB) == lshPairs(ref, batchB))
-  }
-
-  test("ANN: a TAGGED replay appends nothing — no neighbor holds two " +
-      "top-k ranks") {
-    val path = tmp()
-    val idx = Similarity.writeAnnIndex(vecs, "vec_id", "vec", path,
-      "crash_tagann", m = 4, k = 8, nlist = 8, numBuckets = 4)
-    val batch = vecs.filter(col("vec_id") < 20)
-      .select((col("vec_id") + 500).as("vec_id"), col("vec"))
-    Similarity.appendToAnnIndex(idx, batch, "vec_id", "vec",
-      batchTag = Some("absorb_1"))
-    val lists1 = spark.table(idx.listsTable).count()
-    val topk1 = annTopk(idx)
-    Similarity.appendToAnnIndex(idx, batch, "vec_id", "vec",
-      batchTag = Some("absorb_1"))
-    assert(spark.table(idx.listsTable).count() == lists1,
-      "replayed tagged append must not duplicate list rows")
-    assert(annTopk(idx) == topk1)
-  }
-
-  test("ngram: a TAGGED replay appends nothing (probe was already immune " +
-      "via countDistinct; the tag bounds physical size)") {
-    val path = tmp()
-    val idx = Contam.writeNgramIndex(bench, "doc_id", "text", path,
-      "crash_tagng", n = 4, numBuckets = 4)
-    val g0 = spark.table(idx.gramsTable).count()
-    val extra = bench.select((col("doc_id") + 100).as("doc_id"),
-      col("text"))
-    Contam.appendToNgramIndex(idx, extra, "doc_id", "text",
-      batchTag = Some("absorb_1"))
-    val grams1 = spark.table(idx.gramsTable).count()
-    val extraGrams = grams1 - g0
-    val probe1 = contamMap(idx)
-    // double-append UNTAGGED first to prove the probe immunity claim…
-    Contam.appendToNgramIndex(idx, extra, "doc_id", "text")
-    assert(spark.table(idx.gramsTable).count() == grams1 + extraGrams,
-      "sanity: an untagged re-append duplicates the batch's rows")
-    assert(contamMap(idx) == probe1,
-      "countDistinct makes the ngram probe immune to duplicated rows")
-    // …then a tagged replay on a fresh index appends nothing
-    val path2 = tmp()
-    val idx2 = Contam.writeNgramIndex(bench, "doc_id", "text", path2,
-      "crash_tagng2", n = 4, numBuckets = 4)
-    Contam.appendToNgramIndex(idx2, extra, "doc_id", "text",
-      batchTag = Some("absorb_1"))
-    val g2 = spark.table(idx2.gramsTable).count()
-    Contam.appendToNgramIndex(idx2, extra, "doc_id", "text",
-      batchTag = Some("absorb_1"))
-    assert(spark.table(idx2.gramsTable).count() == g2)
-  }
-
-  test("absorbOnce closes the commit-to-marker window end-to-end") {
-    // simulate the exact crash: the append committed (tagged) but the
-    // process died before the _absorbed_ marker landed; the streaming
-    // replay re-enters absorbOnce, which must recognize the committed
-    // tag, append nothing, and write the marker
-    val path = tmp()
-    val idx = Dedup.writeLshIndex(corpus, "doc_id", "text", path,
-      "crash_absorb", shingleSize = 3, numHashes = 64, bands = 16,
-      numBuckets = 4)
-    val batchA = variantBatch(1000)
-    Dedup.appendToLshIndex(idx, batchA, "doc_id", "text",
-      batchTag = Some("absorb_0")) // absorbOnce's tag for batchId 0
-    val posts1 = spark.table(idx.postsTable).count()
-    assert(!new java.io.File(path, "_absorbed_0").exists)
-    val ran = graft.streaming.DocStream.absorbOnce(idx, batchA, 0L)
-    assert(ran, "the replay runs the (no-op) append and writes the marker")
-    assert(new java.io.File(path, "_absorbed_0").exists)
-    assert(spark.table(idx.postsTable).count() == posts1,
-      "the replayed absorb must not re-append the committed batch")
-    // and the NEXT replay short-circuits on the marker
-    assert(!graft.streaming.DocStream.absorbOnce(idx, batchA, 0L))
-  }
-
-  test("retract holds the lease: a tombstone cannot race a compaction") {
-    // the lost-update race: a tombstone appended between a compaction's
-    // tombstones read and its clearTombstones is cleared WITHOUT being
-    // folded into the files — the retracted ids resurface. All three
-    // retract entry points are leased; a concurrent writer makes them
-    // raise with nothing written.
-    val path = tmp()
-    val idx = Contam.writeNgramIndex(bench, "doc_id", "text", path,
-      "crash_retract", n = 4, numBuckets = 4)
-    val lock = new java.io.File(path, "_writer_lock")
-    assert(lock.createNewFile(), "simulated concurrent compaction")
-    intercept[IllegalStateException] {
-      Contam.retractFromNgramIndex(idx,
-        bench.select(col("doc_id")), "doc_id")
-    }
-    assert(!new java.io.File(path, "tombstones").exists,
-      "the locked-out retract must not have appended tombstones")
-    assert(lock.delete())
-    // and with the lease free the retract lands and probes hide the ids
-    Contam.retractFromNgramIndex(idx, bench.select(col("doc_id")),
-      "doc_id")
-    assert(!lock.exists, "the retract lease is released")
-    assert(contamMap(idx).values.forall { case (_, hits, srcs) =>
-      hits == 0L && srcs == 0L },
-      "tombstoned benchmark docs must stop contaminating probes")
   }
 }

@@ -167,8 +167,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.exists(p => p._2 >= 3000L && p._1 >= 1000L && p._1 < 2000L),
       s"expected a b2-vs-absorbed-b1 pair: $got")
     // replay safety: both batchIds are marked; a re-absorb is a no-op
-    assert(!graft.streaming.DocStream.absorbOnce(idx, b1, 0L))
-    assert(!graft.streaming.DocStream.absorbOnce(idx, b2, 1L))
+    for ((b, id) <- Seq(b1 -> 0L, b2 -> 1L))
+      assert(!graft.operators.IndexGen.absorbOnce(idx, b, "doc_id", "text", id))
   }
 
   test("streaming dedup drops redelivered events (dropDuplicatesWithinWatermark)") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Similarity
+import graft.operators.{IndexGen, Similarity}
 import graft.streaming.VecStream
 
 /** Streaming ANN ingest over the persisted IVF-PQ index
@@ -68,7 +68,7 @@ class VecStreamSpec extends AnyFunSuite {
     val p1 = Similarity.probeAnnIndex(refIdx, qs(batch1), "qid", "qvec",
       k = 3, nprobe = 3)
     p1.write.mode("append").parquet(s"$ref/out")
-    Similarity.appendToAnnIndex(refIdx, vb(batch1), "vec_id", "vec")
+    IndexGen.append(refIdx, vb(batch1), "vec_id", "vec")
     val p2 = Similarity.probeAnnIndex(refIdx, qs(batch2), "qid", "qvec",
       k = 3, nprobe = 3)
     p2.write.mode("append").parquet(s"$ref/out")
@@ -92,13 +92,14 @@ class VecStreamSpec extends AnyFunSuite {
     batch.coalesce(1).write.mode("append").parquet(s"$base/docs")
     VecStream.ingestAnnStream(spark, s"$base/docs", idx, s"$base/out",
       s"$base/ckpt", k = 3, nprobe = 3)
-    val filesAfterOnce = new java.io.File(idx.listsDir).listFiles()
+    val filesAfterOnce = new java.io.File(idx.dir("lists")).listFiles()
       .count(_.getName.endsWith(".parquet"))
     // replay the SAME batch id against a fresh checkpoint: the absorb
     // marker (not the checkpoint) is what prevents the double append
-    assert(!VecStream.absorbOnce(idx, batch, 0L),
+    assert(!IndexGen.absorbOnce(idx, batch.select(col("vec_id"),
+        col("embedding").cast("array<double>").as("vec")), "vec_id", "vec", 0L),
       "batchId 0 was already absorbed; the marker must skip it")
-    val filesAfterReplay = new java.io.File(idx.listsDir).listFiles()
+    val filesAfterReplay = new java.io.File(idx.dir("lists")).listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(filesAfterReplay == filesAfterOnce)
   }
@@ -118,10 +119,10 @@ class VecStreamSpec extends AnyFunSuite {
           s"$base/ckpt", k = 3, nprobe = 3,
           compactAtFilesPerBucket = compact)
         // track the live generation like a long-running stream would
-        idx = Similarity.readAnnIndex(spark, s"$base/idx",
+        idx = IndexGen.open(spark, Similarity.Ann, s"$base/idx",
           s"vecstream_cpt_${compact.isDefined}")
       }
-      val files = new java.io.File(idx.listsDir).listFiles()
+      val files = new java.io.File(idx.dir("lists")).listFiles()
         .count(_.getName.endsWith(".parquet"))
       (pairsOf(s"$base/out"), files, idx.gen)
     }
